@@ -2,9 +2,9 @@
 
 The checkpoint table carries one row per validated partition:
 ``(snapshot_id, partition_spec, partition_id, dag_version, rows, violations,
-verdict, metrics, completed_at)``.  On restart the planner anti-joins planned
-partitions against completed ones, so finished partitions are never
-re-validated and reruns are idempotent.
+verdict, metrics, completed_at)``.  On restart the planner reads the
+completed partition ids to the driver and filters the input by them, so
+finished partitions are never re-validated and reruns are idempotent.
 
 Storage: in production this is an Iceberg table
 (``df.writeTo(tbl).append()`` — atomic snapshot commits give exactly-once
@@ -63,7 +63,10 @@ class CheckpointStore:
         self.spark = spark
         self.path = path
 
-    def read(self) -> DataFrame:
+    def _scan(self) -> DataFrame | None:
+        """Every committed checkpoint row, or ``None`` when nothing was
+        ever committed — decided on the driver (path probe + file listing),
+        so a missing or empty store costs no Spark job."""
         # probe via the Spark reader, not os.path — the store path may live
         # on HDFS/S3 where a local-FS existence check would silently report
         # "empty" and disable resume (re-validating everything).
@@ -79,7 +82,9 @@ class CheckpointStore:
                 .option("recursiveFileLookup", "true")
                 .parquet(self.path)
             )
-            df.schema  # force analysis so a missing path raises here
+            # the reader resolved (and listed) the path already: a missing
+            # path raised above, an empty one lists no files
+            return df if df.inputFiles() else None
         except AnalysisException as e:
             # match the structured error class first; fall back to the two
             # message shapes older Sparks/connectors emit for missing paths
@@ -93,15 +98,14 @@ class CheckpointStore:
                 or "PATH_NOT_FOUND" in str(e)
                 or "Path does not exist" in str(e)
             ):
-                return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+                return None
             raise
-        # last-writer-wins per (snapshot, partition, dag_version)
-        w = Window.partitionBy("snapshot_id", "partition_id", "dag_version").orderBy(
-            F.col("completed_at").desc()
-        )
-        return df.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") == 1
-        ).drop("__rn")
+
+    def read(self) -> DataFrame:
+        df = self._scan()
+        if df is None:
+            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+        return _last_writer_wins(df)
 
     def append(self, df: DataFrame) -> None:
         """Atomically publish one batch of checkpoint rows.
@@ -120,15 +124,27 @@ class CheckpointStore:
             df.select(*[f.name for f in CHECKPOINT_SCHEMA.fields]),
         )
 
-    def completed_partitions(self, snapshot_id: str, dag_version: str) -> DataFrame:
-        return (
-            self.read()
-            .where(
+    def completed_ids(self, snapshot_id: str, dag_version: str) -> list[int]:
+        """Partition ids with a checkpoint row, on the driver (one small
+        collect; none at all for a missing or empty store).  Existence
+        needs no last-writer-wins pass: every committed row counts."""
+        df = self._scan()
+        if df is None:
+            return []
+        rows = (
+            df.where(
                 (F.col("snapshot_id") == snapshot_id)
                 & (F.col("dag_version") == dag_version)
             )
             .select("partition_id")
-            .distinct()
+            .collect()
+        )
+        return sorted({r[0] for r in rows if r[0] is not None})
+
+    def completed_partitions(self, snapshot_id: str, dag_version: str) -> DataFrame:
+        return self.spark.createDataFrame(
+            [(i,) for i in self.completed_ids(snapshot_id, dag_version)],
+            "partition_id int",
         )
 
 
@@ -156,19 +172,24 @@ class TableCheckpointStore(CheckpointStore):
             else Table.create(path, CHECKPOINT_SCHEMA)
         )
 
-    def read(self) -> DataFrame:
-        df = self.table.scan(self.spark)
-        w = Window.partitionBy("snapshot_id", "partition_id", "dag_version").orderBy(
-            F.col("completed_at").desc()
-        )
-        return df.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") == 1
-        ).drop("__rn")
+    def _scan(self) -> DataFrame | None:
+        return self.table.scan(self.spark) if self.table.entries() else None
 
     def append(self, df: DataFrame) -> None:
         self.table.append(
             df.select(*[f.name for f in CHECKPOINT_SCHEMA.fields]), n_files=1
         )
+
+
+def _last_writer_wins(df: DataFrame) -> DataFrame:
+    """One row per (snapshot, partition, dag_version): the latest
+    ``completed_at`` wins, so re-appended partitions collapse on read."""
+    w = Window.partitionBy("snapshot_id", "partition_id", "dag_version").orderBy(
+        F.col("completed_at").desc()
+    )
+    return df.withColumn("__rn", F.row_number().over(w)).where(
+        F.col("__rn") == 1
+    ).drop("__rn")
 
 
 def _atomic_publish(spark: SparkSession, path: str, df: DataFrame) -> str:
@@ -269,15 +290,19 @@ def plan_pending(
 ) -> DataFrame:
     """Filter the input to partitions not yet checkpointed.
 
-    The completed set is tiny (one id per partition) — broadcast it so the
-    anti join is map-side and prunes before any heavy work.
+    The completed set is tiny (one id per partition), so it is resolved
+    once on the driver into a scan predicate rather than joined at runtime
+    (a data-induced predicate): the filter pushes into the source scan,
+    where a partitioned source prunes whole partitions by it.  Rows with a
+    NULL partition key never match a completed id and stay pending, as
+    they did under the anti join this replaces.  An empty completed set
+    returns ``df`` unchanged.
     """
-    completed = store.completed_partitions(snapshot_id, dag_version)
-    return df.join(
-        F.broadcast(completed.withColumnRenamed("partition_id", part_col)),
-        [part_col],
-        "left_anti",
-    )
+    ids = store.completed_ids(snapshot_id, dag_version)
+    if not ids:
+        return df
+    part = F.col(part_col)
+    return df.where(part.isNull() | ~part.isin(ids))
 
 
 def _latest_per_partition(df: DataFrame) -> DataFrame:

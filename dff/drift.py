@@ -6,10 +6,12 @@ buckets for ALL tracked columns as ``sum(case when ...)`` expressions —
 no per-column scans, no global sort.  The KS statistic is computed from the
 binned empirical CDFs (shared bin edges with PSI), deliberately avoiding
 ``cume_dist`` over a global ``Window.orderBy`` which would single-task the
-table (SURVEY.md §7.3).  The final small-statistics math (PSI/KS over a few
-dozen bucket counts per partition) is pure Catalyst arithmetic with the
-baseline folded into literals — no shuffle and no Python anywhere in the
-validation drift path.
+table (SURVEY.md §7.3).  The final small-statistics math (PSI/KS/JS over a
+few dozen bucket counts per partition) runs where the counts already are:
+the validation runner collects its n_parts histogram rows anyway and
+applies the numpy :func:`psi` / :func:`ks_binned` / :func:`js_divergence`
+on the driver; :func:`drift_by_partition` keeps the statistics distributed
+as Catalyst arithmetic with the baseline folded into literals.
 
 Exact KS is also provided for small-scale test verification.
 """
@@ -358,6 +360,12 @@ def drift_from_histograms(
     the N->4N scaling gate.  Expressions make the cost ~0 at ANY
     parallelism; :func:`drift_from_histograms_pandas` is kept as the
     numpy cross-check used by the parity test.
+
+    The validation runner no longer uses this: it collects its histogram
+    rows for the per-partition verdicts anyway and applies the numpy
+    statistics to them on the driver (building this expression tree cost
+    more driver time than the whole metrics computation).
+    :func:`drift_by_partition` is its remaining caller.
     """
     pairs = []
     for bins in spec.all_bins:

@@ -1,15 +1,28 @@
 """Validation orchestration: rule DAG + table-level constraints ->
 verdicts / violations / per-partition metrics / checkpoint rows.
 
-This is our analog of the reference's end-to-end flow (SURVEY.md §3.1-3.2)
-with the driver round-trip eliminated: one lineage
-``read -> rule select (+ anti joins, + stat aggs) -> verdicts / violations /
-checkpoint`` where control crosses driver->executors once per action.
+This is our analog of the reference's end-to-end flow (SURVEY.md §3.1-3.2):
+one lineage ``read -> rule select (+ broadcast joins, + stat aggs) ->
+verdicts / violations`` over a persisted slim base, with only per-partition
+aggregates coming back to the driver.
 
-Scan budget per validated batch (at 10^12 rows the scans dominate):
-  1. row-rule pass + uniqueness window  (one shuffle on the unique keys)
-  2. referential anti joins             (map-side, dims broadcast)
-  3. drift histogram agg                (map-side combine, tiny shuffle)
+Actions a resumable run (:meth:`ValidationRunner.run`) takes, in order:
+  1. ``plan_pending``: collect the completed partition ids of this
+     snapshot + DAG version from the checkpoint store (no job when the
+     store is missing or empty) and turn them into a scan filter;
+  2. ``validate``: collect the per-partition row-count + drift histogram
+     aggregate (fills the base cache), then the violation counts per
+     (partition, constraint) (fills the violations cache); verdicts and
+     drift statistics are computed from those rows on the driver;
+  3. if no partition was pending, return None having written nothing;
+  4. ``ViolationsSink.write``: one atomic batch from the violations cache;
+  5. ``CheckpointStore.append``: one atomic batch of checkpoint rows built
+     from the driver-side metrics.
+
+Scan budget per validated batch (at 10^12 rows the scans dominate): one
+decode of the input into the base cache; the uniqueness hash-agg (one
+8-byte shuffle), referential checks (map-side, dims broadcast) and the
+drift histogram agg (map-side combine, tiny shuffle) all read that cache.
 """
 
 from __future__ import annotations
@@ -17,12 +30,23 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .checkpoint import CheckpointStore, ViolationsSink, plan_pending
 from .compiler import ScorerRegistry, compile_ruleset
-from .drift import DriftSpec, drift_from_histograms, partition_histograms
+from .drift import (
+    DRIFT_RESULT_SCHEMA,
+    DriftSpec,
+    bucket_projection,
+    js_divergence,
+    ks_binned,
+    partition_histograms,
+    psi,
+)
 from .ruleset import RuleSet
 
 
@@ -82,13 +106,13 @@ class ValidationResult:
     partition_metrics: DataFrame  # per-partition rollup incl. pass/fail
     drift: DataFrame | None      # per-partition per-column psi/ks (if configured)
     base: DataFrame | None = None  # persisted slim projection feeding all of
-    # the above; materialize ONE consumer first (violations.count() fills
-    # base + violations caches in a single decode pass) so concurrent
-    # output actions read the cache instead of racing to fill it
+    # the above; validate() has filled its cache and the violations cache
+    # by the time it returns, so concurrent output actions read warm caches
     _cached: tuple[DataFrame, ...] = ()  # persisted frames, for unpersist()
+    _metric_rows: tuple = ()  # partition_metrics' rows, held on the driver
 
     def unpersist(self) -> None:
-        """Release this run's caches (base / violations / histogram).
+        """Release this run's caches (base / violations / duplicated-hash set).
 
         Spark's ContextCleaner eventually unpersists them once the driver
         garbage-collects the references, but a long-lived service calling
@@ -97,6 +121,31 @@ class ValidationResult:
         """
         for df in self._cached:
             df.unpersist()
+
+
+def _metrics_schema(part_col: str, part_type: T.DataType) -> T.StructType:
+    """Columns and types of ``ValidationResult.partition_metrics``."""
+    return T.StructType([
+        T.StructField(part_col, part_type),
+        T.StructField("rows", T.LongType(), False),
+        T.StructField("violations", T.LongType(), False),
+        T.StructField(
+            "by_constraint", T.MapType(T.StringType(), T.DoubleType(), False)
+        ),
+        T.StructField("max_psi", T.DoubleType()),
+        T.StructField("max_ks", T.DoubleType()),
+        T.StructField("verdict", T.StringType(), False),
+    ])
+
+
+def _local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
+    """``rows`` as a DataFrame that lives on the driver: built through an
+    Arrow table it plans as a LocalRelation, so collecting it, or anything
+    else computed from it alone, runs no Spark job."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class ValidationRunner:
@@ -180,7 +229,19 @@ class ValidationRunner:
         Note the broadcast assumes duplicate keys are rare (a constraint
         violation, not the norm).  Corpus-scale dedup — where most rows may
         be duplicates — is dff.dedup's job, not a uniqueness constraint.
+
+        The duplicated-hash set persisted for branch 2 is left to Spark's
+        ContextCleaner here; :meth:`validate` releases its own explicitly.
         """
+        return self._violations(df, verdicts)[0]
+
+    def _violations(
+        self, df: DataFrame, verdicts: DataFrame, max_rows: int | None = None
+    ) -> tuple[DataFrame, tuple[DataFrame, ...]]:
+        """:meth:`violations` plus the frames it persisted, which the
+        caller releases once every consumer of the violations has run.
+        ``max_rows`` bounds ``df``'s row count when the caller knows it
+        (see ``_duplicate_hash_survivors``)."""
         cfg = self.config
         key_sel = [*cfg.key_cols, cfg.part_col]
         fused = verdicts
@@ -225,7 +286,9 @@ class ValidationRunner:
             sel = list(dict.fromkeys([*uniq_keys, cfg.part_col, *extra]))
             # shared hash-compressed pre-pass (dff/uniqueness.py): 8-byte
             # hash shuffle + broadcast semi join of the duplicated-hash set
-            survivors = _duplicate_hash_survivors(df.select(*sel), uniq_keys)
+            survivors, dup_cached = _duplicate_hash_survivors(
+                df.select(*sel), uniq_keys, max_rows
+            )
             # per-COPY violation rows: every copy beyond the canonical first
             # (lowest part_col — deterministic under any partitioning) is a
             # violation carrying ITS OWN part/extra columns, so a partition
@@ -247,53 +310,8 @@ class ValidationRunner:
                     F.lit("duplicate key").alias("detail"),
                 )
             )
-            out = out.unionByName(dup)
-        return out
-
-    # -- partition rollup ----------------------------------------------
-    def partition_metrics(
-        self,
-        rows: DataFrame,
-        violations: DataFrame,
-        drift: DataFrame | None,
-    ) -> DataFrame:
-        """Rollup from per-partition row counts (``rows``: part + rows),
-        the violations set, and optional drift rows.  ``rows`` comes fused
-        out of the drift histogram scan when drift is configured — no
-        dedicated scan of the input."""
-        cfg = self.config
-        part = cfg.part_col
-        viol = (
-            violations.groupBy(part, "constraint_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .groupBy(part)
-            .agg(
-                F.sum("n").alias("violations"),
-                F.map_from_entries(
-                    F.collect_list(F.struct("constraint_id", F.col("n").cast("double")))
-                ).alias("by_constraint"),
-            )
-        )
-        out = rows.join(viol, part, "left").fillna({"violations": 0})
-        if drift is not None:
-            dmax = drift.groupBy(F.col("part_id").alias(part)).agg(
-                F.max("psi").alias("max_psi"), F.max("ks").alias("max_ks")
-            )
-            out = out.join(dmax, part, "left")
-            drifted = (F.col("max_psi") > cfg.psi_threshold) | (
-                F.col("max_ks") > cfg.ks_threshold
-            )
-        else:
-            out = out.withColumn("max_psi", F.lit(None).cast("double")).withColumn(
-                "max_ks", F.lit(None).cast("double")
-            )
-            drifted = F.lit(False)
-        return out.withColumn(
-            "verdict",
-            F.when((F.col("violations") > 0) | drifted, F.lit("fail")).otherwise(
-                F.lit("pass")
-            ),
-        )
+            return out.unionByName(dup), dup_cached
+        return out, ()
 
     # -- end to end ------------------------------------------------------
     def validate(self, df: DataFrame, persist_violations: bool = True) -> ValidationResult:
@@ -307,6 +325,20 @@ class ValidationRunner:
         pruning; with ``persist_violations=False`` (warmup / foreachBatch
         micro-batches) the base stays unpersisted and Catalyst recomputes
         it per action, which is the right call for small batches.
+
+        Actions, in order (each a Spark job or a few under AQE):
+          1. collect the per-partition row count + drift histogram
+             aggregate (n_parts rows) — the first read of the input,
+             filling the base cache;
+          2. collect the violation count per (partition, constraint) —
+             fills the violations cache the sink then reads.  The total
+             row count from (1) bounds the duplicated-hash set, so the
+             uniqueness branch broadcasts it without counting it first
+             (up to 2 x MAX_BROADCAST_DUP_HASHES rows).
+        Verdicts, ``max_psi``/``max_ks`` and ``by_constraint`` are computed
+        from those rows on the driver with the numpy statistics in
+        dff/drift.py; ``partition_metrics`` and ``drift`` are driver-local
+        frames built from them, so reading them runs no Spark job.
 
         Shuffle budget: uniqueness hash-agg on the key columns (sort-free),
         histogram agg of n_parts x n_buckets longs, violations rollup.
@@ -322,45 +354,103 @@ class ValidationRunner:
         ]
         has_drift = cfg.drift_spec is not None and cfg.drift_baseline is not None
         if has_drift:
-            from .drift import bucket_projection
-
             base_cols += bucket_projection(cfg.drift_spec, [])
         base = df.select(*base_cols)
         cached: list[DataFrame] = []
         if persist_violations:
             base = base.persist()
             cached.append(base)
-        verdicts = base.select(*key_sel, "verdict_id", "verdict")
-        violations = self.violations(base, verdicts)
-        if persist_violations:
-            # violations are consumed twice (sink write + metrics rollup) and
-            # are orders of magnitude smaller than the input: persist so the
-            # explode/filter passes over the base run once, not twice.
-            violations = violations.persist()
-            cached.append(violations)
-        drift = None
+        part = cfg.part_col
+        n_rows = F.count(F.lit(1)).alias("__rows")
         if has_drift:
             # rows-per-partition rides the SAME aggregation as the histograms
             hist = partition_histograms(
-                base, cfg.part_col, cfg.drift_spec,
-                extra_aggs=[F.count(F.lit(1)).alias("__rows")],
-                prebucketed=True,
-            )
-            if persist_violations:
-                hist = hist.persist()  # n_parts rows, read by rows AND drift
-                cached.append(hist)
-            rows = hist.select(cfg.part_col, F.col("__rows").alias("rows"))
-            drift = drift_from_histograms(
-                hist, cfg.part_col, cfg.drift_spec, cfg.drift_baseline
+                base, part, cfg.drift_spec, extra_aggs=[n_rows], prebucketed=True
             )
         else:
-            rows = base.groupBy(cfg.part_col).agg(F.count(F.lit(1)).alias("rows"))
-        metrics = self.partition_metrics(rows, violations, drift)
+            hist = base.groupBy(part).agg(n_rows)
+        part_rows = hist.collect()
+        verdicts = base.select(*key_sel, "verdict_id", "verdict")
+        # the exact row count bounds the duplicated-hash set, settling the
+        # uniqueness broadcast guard without another action
+        violations, dup_cached = self._violations(
+            base, verdicts, max_rows=sum(r["__rows"] for r in part_rows)
+        )
+        cached.extend(dup_cached)
+        if persist_violations:
+            # violations are consumed twice (count rollup below + sink
+            # write) and are orders of magnitude smaller than the input:
+            # persist so the explode/filter passes over the base run once
+            violations = violations.persist()
+            cached.append(violations)
+        viol_counts = (
+            violations.groupBy(part, "constraint_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
+        metric_rows, drift_rows = self._rollup(part_rows, viol_counts)
+        spark = df.sparkSession
+        metrics = _local_frame(
+            spark, metric_rows, _metrics_schema(part, base.schema[part].dataType)
+        )
+        drift = (
+            _local_frame(spark, drift_rows, DRIFT_RESULT_SCHEMA)
+            if has_drift else None
+        )
         return ValidationResult(
             verdicts, violations, metrics, drift,
             base=base if persist_violations else None,
             _cached=tuple(cached),
+            _metric_rows=tuple(metric_rows),
         )
+
+    def _rollup(self, part_rows: list, viol_counts: list) -> tuple[list, list]:
+        """Per-partition metrics rows (the ``partition_metrics`` columns)
+        and drift rows (``DRIFT_RESULT_SCHEMA``) from the collected
+        histogram/row-count aggregate and per-(partition, constraint)
+        violation counts.  A partition fails on any violation or when its
+        worst column's PSI or KS exceeds the configured threshold."""
+        cfg = self.config
+        counts: dict = {}
+        for p, c, n in viol_counts:
+            counts.setdefault(p, {})[c] = n
+        has_drift = cfg.drift_spec is not None and cfg.drift_baseline is not None
+        bins_list = cfg.drift_spec.all_bins if has_drift else []
+        baseline = {
+            b.column: np.asarray(cfg.drift_baseline[b.column], dtype=np.float64)
+            for b in bins_list
+        }
+        metrics, drift = [], []
+        for r in part_rows:
+            p = r[cfg.part_col]
+            stats = []
+            for bins in bins_list:
+                hist = np.array(
+                    [r[f"h__{bins.column}__{b}"] or 0 for b in range(bins.n_buckets)],
+                    dtype=np.float64,
+                )
+                ref = baseline[bins.column]
+                stats.append(
+                    (psi(ref, hist), ks_binned(ref, hist), js_divergence(ref, hist))
+                )
+                drift.append((None if p is None else int(p), bins.column, *stats[-1]))
+            max_psi = max((s[0] for s in stats), default=None)
+            max_ks = max((s[1] for s in stats), default=None)
+            drifted = bool(stats) and (
+                max_psi > cfg.psi_threshold or max_ks > cfg.ks_threshold
+            )
+            by_c = counts.get(p)
+            n_viol = sum(by_c.values()) if by_c else 0
+            metrics.append((
+                p,
+                r["__rows"],
+                n_viol,
+                {c: float(n) for c, n in by_c.items()} if by_c else None,
+                max_psi,
+                max_ks,
+                "fail" if n_viol > 0 or drifted else "pass",
+            ))
+        return metrics, drift
 
     def checkpoint_rows(self, metrics: DataFrame, dag_version: str) -> DataFrame:
         cfg = self.config
@@ -397,14 +487,16 @@ class ValidationRunner:
     ) -> ValidationResult | None:
         """Resumable validation: validate only partitions without a
         checkpoint row, write violations + checkpoint, return the batch
-        result (None if everything was already complete)."""
+        result (None, with nothing written, if everything was already
+        complete)."""
         cfg = self.config
         pending = plan_pending(
             df, cfg.part_col, store, cfg.snapshot_id, cfg.ruleset.version
         )
-        if pending.limit(1).count() == 0:
-            return None
         result = self.validate(pending)
+        if not result._metric_rows:  # no pending partition: nothing to write
+            result.unpersist()
+            return None
         if violations_path:
             # atomic batch publish (staged-rename, same contract as the
             # checkpoint store) with read-side per-partition last-writer-

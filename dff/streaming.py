@@ -49,8 +49,12 @@ def validate_stream(
         if batch_df.isEmpty():
             return
         verdicts = runner.row_verdicts(batch_df)
-        violations = runner.violations(batch_df, verdicts)
-        sink(violations, batch_id)
+        violations, cached = runner._violations(batch_df, verdicts)
+        try:
+            sink(violations, batch_id)
+        finally:
+            for c in cached:
+                c.unpersist()
 
     writer = stream_df.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_location

@@ -41,7 +41,9 @@ def duplicate_key_counts(df: DataFrame, keys: list[str]) -> DataFrame:
 MAX_BROADCAST_DUP_HASHES = 4_000_000
 
 
-def _duplicate_hash_survivors(df: DataFrame, keys: list[str]) -> DataFrame:
+def _duplicate_hash_survivors(
+    df: DataFrame, keys: list[str], max_rows: int | None = None
+) -> tuple[DataFrame, tuple[DataFrame, ...]]:
     """Rows whose ``xxhash64(keys)`` is duplicated — a superset of the true
     duplicate-key rows (hash collisions possible), produced with an 8-byte
     shuffle + a SIZE-GUARDED broadcast semi join.
@@ -52,15 +54,25 @@ def _duplicate_hash_survivors(df: DataFrame, keys: list[str]) -> DataFrame:
     executor memory at 10^12 rows.  Plain AQE (no hint) is memory-safe
     but measurably slower in the expected sparse-duplicate case — the
     probe side materializes a shuffle write before AQE converts the join
-    (measured 6.3s vs 4.6s on 16M rows at local[8]).  So: persist the
-    duplicated-hash aggregate (tiny by the uniqueness-constraint
-    assumption; MEMORY_AND_DISK so a pathological set spills instead of
-    OOMing), count it with an early-out LIMIT, and broadcast only under
-    ``MAX_BROADCAST_DUP_HASHES`` — the probe side then streams straight
-    into a map-side hash join with no shuffle write; an over-limit set
-    keeps the shuffled join.  The count is an extra action at plan-build
-    time, but it merely materializes the cache the join was about to
-    need anyway.
+    (measured 6.3s vs 4.6s on 16M rows at local[8]).  So the set broadcasts
+    only under ``MAX_BROADCAST_DUP_HASHES`` — the probe side then streams
+    straight into a map-side hash join with no shuffle write; an over-limit
+    set keeps the shuffled join.
+
+    Every duplicated hash covers at least two rows, so a caller that knows
+    ``max_rows`` (an upper bound on ``df``'s row count) settles the guard
+    for free when ``max_rows // 2`` is under the limit: the set broadcasts
+    straight from its aggregate, with no cache and no extra action.
+    Otherwise the aggregate is persisted (MEMORY_AND_DISK, so a
+    pathological set spills instead of OOMing) and counted with an
+    early-out LIMIT; the count is an extra action at plan-build time, but
+    it merely materializes the cache the join was about to need anyway.
+
+    Returns ``(survivors, cached)``: ``cached`` holds the persisted
+    aggregate, if any, for the caller to release once every consumer of
+    ``survivors`` has run (the validation runner hands it to
+    ``ValidationResult.unpersist``); the lazy helpers below leave it to
+    Spark's ContextCleaner.
     """
     from pyspark import StorageLevel
 
@@ -71,15 +83,22 @@ def _duplicate_hash_survivors(df: DataFrame, keys: list[str]) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("__hn"))
         .where(F.col("__hn") > 1)
         .select("__h")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    small = (
-        dup_hashes.limit(MAX_BROADCAST_DUP_HASHES + 1).count()
-        <= MAX_BROADCAST_DUP_HASHES
     )
-    build = F.broadcast(dup_hashes) if small else dup_hashes
-    return df.withColumn("__h", key_hash).join(
+    cached: tuple[DataFrame, ...] = ()
+    if max_rows is not None and max_rows // 2 <= MAX_BROADCAST_DUP_HASHES:
+        build = F.broadcast(dup_hashes)
+    else:
+        dup_hashes = dup_hashes.persist(StorageLevel.MEMORY_AND_DISK)
+        cached = (dup_hashes,)
+        small = (
+            dup_hashes.limit(MAX_BROADCAST_DUP_HASHES + 1).count()
+            <= MAX_BROADCAST_DUP_HASHES
+        )
+        build = F.broadcast(dup_hashes) if small else dup_hashes
+    survivors = df.withColumn("__h", key_hash).join(
         build, "__h", "left_semi"
     ).drop("__h")
+    return survivors, cached
 
 
 def duplicate_rows(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -90,7 +109,7 @@ def duplicate_rows(df: DataFrame, keys: list[str]) -> DataFrame:
     survivor set, so a hash-collision row whose true key is unique is
     filtered back out.
     """
-    survivors = _duplicate_hash_survivors(df, keys)
+    survivors, _ = _duplicate_hash_survivors(df, keys)
     w = Window.partitionBy(*keys)
     return (
         survivors.withColumn("__n", F.count(F.lit(1)).over(w))
@@ -127,7 +146,7 @@ def uniqueness_violations(
     survivor set, never the full table.  ``__rn > 1`` alone is exact — a
     hash-collision row with a unique true key forms a single-row group.
     """
-    survivors = _duplicate_hash_survivors(df, keys)
+    survivors, _ = _duplicate_hash_survivors(df, keys)
     w = Window.partitionBy(*keys).orderBy(*[F.col(c).asc() for c in df.columns])
     return (
         survivors.withColumn("__rn", F.row_number().over(w))

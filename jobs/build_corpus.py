@@ -105,7 +105,6 @@ def main(argv: list[str] | None = None) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(args.src)
-    n_raw = docs.count()
 
     # 1. QUALITY — derive the scored columns once, audit with the DAG,
     # keep only docs with zero violations (anti-join on the key).
@@ -121,6 +120,8 @@ def main(argv: list[str] | None = None) -> dict:
         partition_spec="by(source)",
     )
     qres = ValidationRunner(qcfg).validate(scored)
+    # the audit's per-source rollup counted every input row
+    n_raw = sum(m["rows"] for m in qres.partition_metrics.collect())
     bad_ids = qres.violations.select("doc_id").distinct()
     clean = scored.join(bad_ids, "doc_id", "left_anti").drop(
         "__quality", "__repetition"
@@ -178,7 +179,10 @@ def main(argv: list[str] | None = None) -> dict:
         weights = {s: 1.0 for s in srcs}  # bounded: one row per domain
     pool = surv.where(F.col("source").isin(list(weights)))
     total = pool.agg(F.sum(F.col("n_chars").cast("long"))).collect()[0][0] or 0
-    clean.unpersist()  # surv's cache is filled now; clean is dead weight
+    # surv's cache is filled now; clean and the quality audit's caches
+    # are dead weight
+    clean.unpersist()
+    qres.unpersist()
     budget = int(int(total) * args.budget_frac)
     plan = mixture_plan(pool, "source", "n_chars", weights, budget)
     mixed = mixture_sample(pool, "source", ["doc_id"], plan, seed=args.seed)
@@ -213,8 +217,11 @@ def main(argv: list[str] | None = None) -> dict:
         partition_spec="by(shard)",
     )
     lres = ValidationRunner(lcfg).validate(delta)
-    n_packed = delta.count()
-    n_viol = lres.violations.count()
+    lres.unpersist()
+    # the audit's per-shard rollup counted the delta's rows and violations
+    layout = lres.partition_metrics.collect()
+    n_packed = sum(m["rows"] for m in layout)
+    n_viol = sum(m["violations"] for m in layout)
     rate = (n_viol / n_packed) if n_packed else 0.0
     version = None
     if rate <= args.max_violation_rate:

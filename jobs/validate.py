@@ -198,15 +198,12 @@ def main(argv: list[str] | None = None) -> dict:
             spark.stop()
             return {"status": "already-complete"}
     else:
+        # validate() returns with the base and violations caches filled
+        # (its metrics collects read the input once), so the independent
+        # output actions run CONCURRENTLY against warm caches — Spark's
+        # scheduler interleaves their stages, filling cores a single
+        # sequential chain would idle.
         result = runner.validate(df)
-        # ONE sequential action fills BOTH caches: the violations count's
-        # first stage computes the persisted base partitions (single decode
-        # of the heavy columns) as a side effect of scanning them, and its
-        # later stages read that cache — no separate base.count() job, no
-        # extra cache pass.  Then the independent output actions run
-        # CONCURRENTLY against warm caches — Spark's scheduler interleaves
-        # their stages, filling cores a single sequential chain would idle.
-        result.violations.count()
         from concurrent.futures import ThreadPoolExecutor
 
         def write_verdicts():

@@ -22,6 +22,15 @@ SPEC = {
     ],
 }
 
+#: Spark jobs a full run() over a 2k-row parquet input with uniqueness,
+#: one referential check and drift may trigger (empty store, local[4]):
+#: 3 for the row-count/histogram collect (base cache, shuffle, result),
+#: 8 for the violation-count collect (the dim's distinct and broadcast, the
+#: duplicated-hash aggregate and broadcast, the window shuffle, the
+#: violations cache, the rollup's shuffle and result), 1 violations write,
+#: 1 checkpoint write
+RUN_JOB_BUDGET = 13
+
 
 def make_runner(spark, df, with_drift=False, snapshot_id="snap-A"):
     cfg = ValidationConfig(
@@ -411,3 +420,114 @@ def test_table_checkpoint_store_atomicity_and_audit(spark, tmp_path):
     ) == [0, 7]
     ops = [h["operation"] for h in store2.table.history()]
     assert ops == ["create", "append", "append"]
+
+
+def _batch_dirs(path) -> list[str]:
+    import os
+
+    if not os.path.isdir(path):
+        return []
+    return sorted(e for e in os.listdir(path) if e.startswith("batch-"))
+
+
+def test_resume_validates_null_partition_rows(spark, tmp_path):
+    """NULL-keyed rows never match a completed partition id, so they stay
+    pending on resume (as they did under the anti join the scan filter
+    replaced) and are validated and counted in their own metrics row."""
+    df = synthetic_source_files(spark, 3000, n_repos=100).withColumn(
+        "part_id", F.when(F.col("part_id") != 9, F.col("part_id"))
+    ).cache()
+    n_null = df.where(F.col("part_id").isNull()).count()
+    assert n_null > 0
+    store = CheckpointStore(spark, str(tmp_path / "ckpt"))
+    runner = make_runner(spark, df, snapshot_id="snap-N")
+    assert runner.run(df.where(F.col("part_id") < 8), store) is not None
+
+    pending = plan_pending(df, "part_id", store, "snap-N", "dag-v1")
+    assert pending.where(F.col("part_id").isNull()).count() == n_null
+    r = runner.run(df, store)
+    by_part = {m["part_id"]: m for m in r.partition_metrics.collect()}
+    assert set(by_part) == set(range(8, 16)) - {9} | {None}
+    assert by_part[None]["rows"] == n_null
+    null_viols = r.violations.where(F.col("part_id").isNull()).count()
+    assert by_part[None]["violations"] == null_viols
+    r.unpersist()
+    df.unpersist()
+
+
+def test_complete_store_run_returns_none_and_writes_nothing(spark, tmp_path):
+    df = synthetic_source_files(spark, 2000, n_repos=100)
+    store = CheckpointStore(spark, str(tmp_path / "ckpt"))
+    viol = str(tmp_path / "viol")
+    runner = make_runner(spark, df, snapshot_id="snap-D")
+    runner.run(df, store, violations_path=viol).unpersist()
+    before = (_batch_dirs(store.path), _batch_dirs(viol))
+    assert len(before[0]) == 1 and len(before[1]) == 1
+
+    assert runner.run(df, store, violations_path=viol) is None
+    assert (_batch_dirs(store.path), _batch_dirs(viol)) == before
+
+
+def test_run_checkpoint_rows_and_drift_match_validate(spark, tmp_path):
+    """run()'s committed checkpoint rows equal checkpoint_rows() over a
+    plain validate() of the same input, and the driver-side drift
+    statistics equal the Catalyst realization on the same histograms."""
+    from dff.drift import drift_from_histograms, partition_histograms
+
+    df = synthetic_source_files(spark, 4000, n_repos=100, drift_part=5).cache()
+    runner = make_runner(spark, df, with_drift=True, snapshot_id="snap-M")
+    cfg = runner.config
+    store = CheckpointStore(spark, str(tmp_path / "ckpt"))
+    r = runner.run(df, store)
+    v = runner.validate(df)
+
+    cols = ["partition_id", "rows", "violations", "verdict", "metrics"]
+
+    def rows(frame):
+        return sorted(
+            (*(r[c] for c in cols[:-1]), sorted(r["metrics"].items()))
+            for r in frame.select(*cols).collect()
+        )
+
+    assert rows(store.read()) == rows(runner.checkpoint_rows(v.partition_metrics, "dag-v1"))
+    verdict = {m["part_id"]: m["verdict"] for m in v.partition_metrics.collect()}
+    assert verdict[5] == "fail"
+
+    hist = partition_histograms(df, "part_id", cfg.drift_spec)
+    want = {
+        (d["part_id"], d["column"]): d
+        for d in drift_from_histograms(
+            hist, "part_id", cfg.drift_spec, cfg.drift_baseline
+        ).collect()
+    }
+    got = {(d["part_id"], d["column"]): d for d in v.drift.collect()}
+    assert set(got) == set(want)
+    for k, d in got.items():
+        for stat in ("psi", "ks", "js"):
+            assert abs(d[stat] - want[k][stat]) <= 1e-12, (k, stat)
+    assert got[(5, "lang")]["psi"] > cfg.psi_threshold
+    r.unpersist()
+    v.unpersist()
+    df.unpersist()
+
+
+def test_run_job_budget(spark, tmp_path):
+    """A full run() into an empty store: plan_pending costs no job, and the
+    whole run stays within a fixed job budget (regression guard for
+    per-job driver overhead creeping back in)."""
+    df = synthetic_source_files(spark, 2000, n_repos=100)
+    df.write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    runner = make_runner(spark, src, with_drift=True, snapshot_id="snap-J")
+    store = CheckpointStore(spark, str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup("budget-plan", "plan_pending")
+    plan_pending(src, "part_id", store, "snap-J", "dag-v1")
+    sc.setJobGroup("budget-run", "run")
+    try:
+        runner.run(src, store, violations_path=str(tmp_path / "viol")).unpersist()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(tracker.getJobIdsForGroup("budget-plan")) == 0
+    assert len(tracker.getJobIdsForGroup("budget-run")) <= RUN_JOB_BUDGET

@@ -115,9 +115,9 @@ def test_duplicate_hash_survivors_falls_back_when_dup_set_large(spark, monkeypat
     df = spark.createDataFrame(
         [(i % 50, f"p{i}") for i in range(400)], "k long, payload string"
     )
-    normal = u._duplicate_hash_survivors(df, ["k"])
+    normal, normal_cached = u._duplicate_hash_survivors(df, ["k"])
     monkeypatch.setattr(u, "MAX_BROADCAST_DUP_HASHES", 1)
-    fallback = u._duplicate_hash_survivors(df, ["k"])
+    fallback, fallback_cached = u._duplicate_hash_survivors(df, ["k"])
     assert sorted(map(tuple, fallback.collect())) == sorted(
         map(tuple, normal.collect())
     )
@@ -129,6 +129,32 @@ def test_duplicate_hash_survivors_falls_back_when_dup_set_large(spark, monkeypat
     assert "broadcast" not in opt_fb.lower(), opt_fb
     opt_n = normal._jdf.queryExecution().optimizedPlan().toString()
     assert "broadcast" in opt_n.lower(), opt_n
+    for cached in (*normal_cached, *fallback_cached):
+        cached.unpersist()
+
+
+def test_duplicate_hash_survivors_row_bound_skips_cache_and_count(spark):
+    """A known row bound at or under 2x the broadcast limit settles the
+    size guard without a cache or an action (every duplicated hash covers
+    two rows); over it, the counted, persisted path runs as before."""
+    import dff.uniqueness as u
+
+    df = spark.createDataFrame(
+        [(i % 50, f"p{i}") for i in range(400)], "k long, payload string"
+    )
+    counted, counted_cached = u._duplicate_hash_survivors(df, ["k"])
+    bounded, bounded_cached = u._duplicate_hash_survivors(df, ["k"], max_rows=400)
+    assert bounded_cached == () and len(counted_cached) == 1
+    assert sorted(map(tuple, bounded.collect())) == sorted(
+        map(tuple, counted.collect())
+    )
+    opt = bounded._jdf.queryExecution().optimizedPlan().toString()
+    assert "broadcast" in opt.lower(), opt
+    over = 2 * u.MAX_BROADCAST_DUP_HASHES + 2
+    _, over_cached = u._duplicate_hash_survivors(df, ["k"], max_rows=over)
+    assert len(over_cached) == 1
+    for cached in (*counted_cached, *over_cached):
+        cached.unpersist()
 
 
 def test_orphan_rows_big_dim_matches_plain_incl_null_keys(spark):
