@@ -231,10 +231,11 @@ class ViolationsSink:
     Replacement semantics are read-side last-writer-wins PER PARTITION
     (mirroring CheckpointStore): each batch stamps a constant
     (``__written_at``, ``__batch_id``) pair; ``read`` keeps, for every
-    ``part_col`` value, only rows from the newest batch containing that
-    partition.  A crash between the violations write and the checkpoint
-    append re-validates those partitions on resume, and their newer batch
-    supersedes the orphan — idempotent, never duplicated.
+    ``part_col`` value (NULL included), only rows from the newest batch
+    containing that partition.  A crash between the violations write and
+    the checkpoint append re-validates those partitions on resume, and
+    their newer batch supersedes the orphan — idempotent, never
+    duplicated.
 
     Scale: the winners frame is one row per partition (tiny, broadcast),
     so ``read`` adds a map-side semi join — the violation rows themselves
@@ -269,16 +270,21 @@ class ViolationsSink:
             df.groupBy(self.part_col)
             .agg(F.max(F.struct(self.TS_COL, self.BATCH_COL)).alias("__w"))
             .select(
-                self.part_col,
-                F.col(f"__w.{self.TS_COL}").alias(self.TS_COL),
-                F.col(f"__w.{self.BATCH_COL}").alias(self.BATCH_COL),
+                F.col(self.part_col).alias("__part"),
+                F.col(f"__w.{self.TS_COL}").alias("__ts"),
+                F.col(f"__w.{self.BATCH_COL}").alias("__batch"),
             )
         )
-        return df.join(
-            F.broadcast(winners),
-            [self.part_col, self.TS_COL, self.BATCH_COL],
-            "left_semi",
-        ).drop(self.TS_COL, self.BATCH_COL)
+        # null-safe on the partition: rows with a NULL partition key are
+        # one partition, and their newest batch wins like any other's
+        newest = (
+            F.col(self.part_col).eqNullSafe(F.col("__part"))
+            & (F.col(self.TS_COL) == F.col("__ts"))
+            & (F.col(self.BATCH_COL) == F.col("__batch"))
+        )
+        return df.join(F.broadcast(winners), newest, "left_semi").drop(
+            self.TS_COL, self.BATCH_COL
+        )
 
 
 def plan_pending(

@@ -67,30 +67,26 @@ def exact_duplicate_groups(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep the lowest-id doc per identical content (deterministic).
+def exact_duplicate_losers(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Distinct ``id_col`` values of the exact-duplicate LOSERS: every doc
+    whose identical content also appears under a lower id.
 
     Hash-compressed realization (r6, guide §2.3 "shuffle keys instead of
-    payloads"): the old single-window plan shuffled EVERY row's text by
-    ``sha2(text)`` just to rank ids within groups that are overwhelmingly
-    singletons.  Duplicates are the exception in a real corpus, so:
+    payloads"): duplicates are the exception in a real corpus, so
 
-    1. aggregate ``xxhash64(text)`` — the only full-table shuffle now
-       carries an 8-byte hash + count per distinct hash (map-side
-       combined), not the text;
+    1. aggregate ``xxhash64(text)`` — the only full-table shuffle carries
+       an 8-byte hash + count per distinct hash (map-side combined), not
+       the text;
     2. rows whose hash is duplicated (tiny set) re-shuffle — with text —
        through an exact window partitioned by the TRUE text (so a hash
        collision between different texts cannot drop a survivor), ranked
-       by id; every rank-&gt;1 row is a loser;
-    3. anti-join the loser ids back (AQE broadcasts the loser set when it
-       is small, which is the design assumption).
+       by id; every rank-&gt;1 row is a loser.
 
-    Results are identical to the window plan for any input: step 2's
-    window groups by the text itself, and singleton-hash rows are
-    survivors by construction.  The input lineage is evaluated up to
-    three times (hash pass, candidate pass, output pass) — callers whose
-    input is an expensive derived frame (not a cheap scan/filter) should
-    persist it first (jobs/build_corpus.py does).
+    The result is a small data-induced set: join it back as an anti join
+    (:func:`dedup_exact`) or as a tag (``jobs/build_corpus.py``).  It is
+    distinct, so a left join with it never multiplies rows, even when
+    ``id_col`` repeats.  The input lineage is evaluated twice (hash pass,
+    candidate pass); persist an expensive derived input first.
     """
     h = F.xxhash64(F.col(text_col))
     dup_h = (
@@ -102,14 +98,24 @@ def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
     cand = df.withColumn("__h", h).join(dup_h, "__h", "left_semi")
     w = Window.partitionBy(F.col(text_col)).orderBy(F.col(id_col).asc())
-    losers = (
+    return (
         cand.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") > 1)
-        .select(F.col(id_col).alias("__loser"))
+        .select(id_col)
+        .distinct()
     )
-    return df.join(
-        losers, F.col(id_col) == F.col("__loser"), "left_anti"
-    )
+
+
+def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Keep the lowest-id doc per identical content (deterministic): the
+    anti join of ``df`` with :func:`exact_duplicate_losers`.
+
+    Results are identical to a single full-table window ranked by id for
+    any input: the loser window groups by the text itself, and
+    singleton-hash rows are survivors by construction.  The input lineage
+    is evaluated three times (hash pass, candidate pass, output pass).
+    """
+    return df.join(exact_duplicate_losers(df, text_col, id_col), id_col, "left_anti")
 
 
 # -------------------------------------------------------------- minhash --

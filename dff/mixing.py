@@ -29,10 +29,12 @@ replays the whole derivation in DuckDB):
   (the partial epoch) — stable under repartitioning and engines.
 
 Scale shape (100 TB): one bounded aggregate (rows = #domains) plans the
-mixture; the sample itself is a map-only explode+filter — down-sampled
-domains emit one epoch and prune at the scan, up-sampled domains emit
-``ceil(rate)`` copies (bounded by ``max_rate``).  No shuffle anywhere;
-whole-stage codegen end to end.
+mixture (:func:`mixture_plan`; a caller that already holds the
+per-domain availability plans on the driver with
+:func:`mixture_plan_from_avail`); the sample itself is a map-only
+explode+filter — down-sampled domains emit one epoch and prune at the
+scan, up-sampled domains emit ``ceil(rate)`` copies (bounded by
+``max_rate``).  No shuffle anywhere; whole-stage codegen end to end.
 """
 
 from __future__ import annotations
@@ -72,31 +74,48 @@ def mixture_plan(
     allow_upsample: bool = True,
     max_rate: float = 4.0,
 ) -> dict[str, MixtureShare]:
-    """Derive per-domain sampling rates for a token ``budget``.
-
-    ``weights`` are renormalized over the domains actually present (a
-    recipe naming an absent domain redistributes its share), summing in
-    sorted-domain order so the normalization is reproducible.  The
-    aggregate is bounded: one row per domain (same convention as the
-    strata collect in dff/sampling.py).
+    """Derive per-domain sampling rates for a token ``budget``: one
+    bounded aggregate (one row per weighted domain, same convention as
+    the strata collect in dff/sampling.py) for the availability, then
+    :func:`mixture_plan_from_avail`.
 
     ``weight_col`` must be integral (token/char counts) — that is what
     makes the plan exact and cross-engine replayable; a float weight
     column would reintroduce summation-order nondeterminism.
     """
-    if budget < 0:
-        raise ValueError(f"budget must be >= 0, got {budget}")
-    for d, w in weights.items():
-        if w < 0:
-            raise ValueError(f"weight for domain {d!r} must be >= 0")
     rows = (
         df.where(F.col(domain_col).isin(list(weights)))
         .groupBy(domain_col)
         .agg(F.sum(F.col(weight_col).cast("long")).alias("__avail"))
         .collect()  # bounded: one row per weighted domain
     )
-    avail = {r[domain_col]: int(r["__avail"]) for r in rows if r["__avail"]}
-    present = sorted(d for d in avail if weights.get(d, 0.0) > 0.0)
+    avail = {r[domain_col]: r["__avail"] for r in rows}
+    return mixture_plan_from_avail(avail, weights, budget, allow_upsample, max_rate)
+
+
+def mixture_plan_from_avail(
+    avail: dict[str, int | None],
+    weights: dict[str, float],
+    budget: int,
+    allow_upsample: bool = True,
+    max_rate: float = 4.0,
+) -> dict[str, MixtureShare]:
+    """The driver half of :func:`mixture_plan`: rates from an exact
+    integer availability per domain, for callers that already aggregated
+    it.  Runs no Spark job.
+
+    ``weights`` are renormalized over the domains actually present (a
+    recipe naming an absent domain, or one with zero or NULL ``avail``,
+    redistributes its share), summing in sorted-domain order so the
+    normalization is reproducible.  Domains in ``avail`` without a
+    positive weight are ignored.
+    """
+    if budget < 0:
+        raise ValueError(f"budget must be >= 0, got {budget}")
+    for d, w in weights.items():
+        if w < 0:
+            raise ValueError(f"weight for domain {d!r} must be >= 0")
+    present = sorted(d for d, a in avail.items() if a and weights.get(d, 0.0) > 0.0)
     if not present:
         return {}
     wsum = 0.0
@@ -114,7 +133,7 @@ def mixture_plan(
         plan[d] = MixtureShare(
             domain=d,
             weight=weights[d] / wsum,
-            avail=avail[d],
+            avail=int(avail[d]),
             target=float(budget) * weights[d] / wsum,
             rate=rate,
             epochs_full=full,

@@ -418,33 +418,45 @@ def build_ivf_index(
     # id <= id*)` selects precisely that set (ids are unique by contract)
     # — a pure pushed-down filter, no local-relation build, no broadcast
     # hash table per call (measured 0.52 s -> ~0.3 s per build at 100k).
+    # NULL ids are excluded from both passes: the boundary compares ids,
+    # and a NULL id would fall out of pass 2 (or, as the boundary row,
+    # drop every tie at h*) while pass 1 kept it.
     n_sample = max(n_centroids * 64, 1024)
-    sample_h = F.xxhash64(F.col("_id"), F.lit("ivf"))
+    sample_h = F.xxhash64(F.col(item_id), F.lit("ivf"))
+    in_sample = F.col(item_id).isNotNull() & (
+        F.pmod(sample_h, F.lit(997)) < F.lit(512)
+    )
     id_rows = (
-        items.select(F.col(item_id).alias("_id"), sample_h.alias("_h"))
-        .where(F.pmod(F.col("_h"), F.lit(997)) < F.lit(512))
+        items.where(in_sample)
+        .select(F.col(item_id).alias("_id"), sample_h.alias("_h"))
         .orderBy(F.col("_h").asc(), F.col("_id").asc())
         .limit(n_sample)
         .collect()
     )
-    ids = [r["_id"] for r in id_rows]
-    order = {v: i for i, v in enumerate(ids)}
+    order = {r["_id"]: i for i, r in enumerate(id_rows)}
     if id_rows:
         h_max, id_max = id_rows[-1]["_h"], id_rows[-1]["_id"]
-        boundary = (F.col("_h") < F.lit(h_max)) | (
-            (F.col("_h") == F.lit(h_max)) & (F.col("_id") <= F.lit(id_max))
+        boundary = (sample_h < F.lit(h_max)) | (
+            (sample_h == F.lit(h_max)) & (F.col(item_id) <= F.lit(id_max))
         )
         sample_rows = (
-            items.select(
+            items.where(in_sample & boundary)
+            .select(
                 F.col(item_id).alias("_id"),
                 F.col(emb).cast("array<double>").alias("_e"),
             )
-            .withColumn("_h", F.xxhash64(F.col("_id"), F.lit("ivf")))
-            .where((F.pmod(F.col("_h"), F.lit(997)) < F.lit(512)) & boundary)
             .collect()
         )
     else:
         sample_rows = []
+    # a deterministic source returns exactly the sampled ids again
+    if {r["_id"] for r in sample_rows} != order.keys():
+        raise ValueError(
+            "IVF centroid sample source must be deterministic: the two "
+            f"passes over {item_id!r} selected different ids; persist or "
+            "checkpoint a non-deterministic input (rand, "
+            "monotonically_increasing_id, mutating data) first"
+        )
     # k-means init picks rows by position: keep the hash order stable
     sample_rows.sort(key=lambda r: order[r["_id"]])
     sample = np.array([r["_e"] for r in sample_rows], dtype=np.float64)

@@ -23,6 +23,25 @@ mixture passes are map-only, dedup shuffles 8-byte hashes, packing
 shuffles (key, token) pairs, and the WAP audit costs O(batch) via
 ``scan_added``.
 
+Stages 2-3 drop nothing on their own: each derives a small set of doc ids
+(exact-dedup losers, semantic drops, contaminated docs) that is left-joined
+onto the quality survivors as a tag, so no count re-runs the stages before
+it.  Actions a build takes, in order:
+  1. the quality audit's ``validate()`` (its two collects fill the audit's
+     caches); the raw row count comes from its per-source metrics;
+  2. with ``--embeddings`` only: ``semantic_dedup``'s jobs over the exact
+     survivors' vectors;
+  3. one ``groupBy(source)`` collect over the tagged frame: it fills the
+     ``clean`` and tagged caches, runs exact dedup and decontamination
+     once, and returns every stage count, the default weights and each
+     source's availability; the mixture plan is computed from those rows
+     on the driver;
+  4. the branch append of the packed layout (mixture sample + packing,
+     read from the tagged cache);
+  5. the layout audit's ``validate()`` over the appended delta;
+  6. publish (when the audit is green) and the context-total aggregate
+     over the delta.
+
 Usage:
   python jobs/build_corpus.py --src DOCS.parquet --out TABLE_ROOT
       [--weights '{"src1": 0.5, "src2": 0.5}']   (default: uniform)
@@ -92,8 +111,8 @@ def main(argv: list[str] | None = None) -> dict:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    from dff.dedup import dedup_exact
-    from dff.mixing import mixture_plan, mixture_sample
+    from dff.dedup import exact_duplicate_losers
+    from dff.mixing import mixture_plan_from_avail, mixture_sample
     from dff.packing import pack_sequences
     from dff.ruleset import parse_json
     from dff.runner import ValidationConfig, ValidationRunner
@@ -123,20 +142,28 @@ def main(argv: list[str] | None = None) -> dict:
     # the audit's per-source rollup counted every input row
     n_raw = sum(m["rows"] for m in qres.partition_metrics.collect())
     bad_ids = qres.violations.select("doc_id").distinct()
-    clean = scored.join(bad_ids, "doc_id", "left_anti").drop(
-        "__quality", "__repetition"
+    # `clean` feeds the loser, semantic and contamination sets and the
+    # tagged frame: persist it before anything reads it.  The uniqueness
+    # rule drops every row of a repeated doc_id, so from here on a doc_id
+    # names one row (or is NULL, which no tag join matches).
+    clean = (
+        scored.join(bad_ids, "doc_id", "left_anti")
+        .drop("__quality", "__repetition")
+        .persist()
     )
-    n_quality = clean.count()
 
-    # 2. DEDUP — exact content survivors (min doc_id per text hash),
-    # then semantic pruning over their embeddings when supplied.
-    # `clean` is an expensive derived frame (rule DAG + anti join) and the
-    # hash-compressed dedup_exact (r6) evaluates its input lineage up to
-    # three times — persist it for the dedup passes, release right after.
-    clean = clean.persist()
-    surv = dedup_exact(clean, "text", "doc_id")
-    n_dedup = surv.count()
-    n_semantic_dropped = 0
+    # 2. DEDUP — tag, do not drop: exact losers (a lower doc_id holds the
+    # same text), then, when embeddings are supplied, semantic drops among
+    # the exact survivors.  Each tag is a left join with a distinct id set.
+    tagged = clean.join(
+        exact_duplicate_losers(clean, "text", "doc_id").withColumn(
+            "__lost", F.lit(True)
+        ),
+        "doc_id",
+        "left",
+    )
+    exact_kept = F.col("__lost").isNull()
+    deduped = exact_kept
     if args.embeddings:
         from dff.semdedup import semantic_dedup
 
@@ -144,48 +171,71 @@ def main(argv: list[str] | None = None) -> dict:
             F.col("vec_id").alias("doc_id"), "embedding"
         )
         verd = semantic_dedup(
-            surv.select("doc_id").join(emb, "doc_id"),  # survivors' vectors only
+            # survivors' vectors only
+            tagged.where(exact_kept).select("doc_id").join(emb, "doc_id"),
             "doc_id",
             "embedding",
             threshold=args.semantic_threshold,
             n_centroids=args.semantic_centroids,
         )
-        drops = verd.where(~F.col("kept")).select("doc_id")
-        n_semantic_dropped = drops.count()
-        surv = surv.join(drops, "doc_id", "left_anti")
+        drops = verd.where(~F.col("kept")).select("doc_id").distinct()
+        tagged = tagged.join(
+            drops.withColumn("__sem", F.lit(True)), "doc_id", "left"
+        )
+        deduped = exact_kept & F.col("__sem").isNull()
 
-    # 3. DECONTAM — optional benchmark-overlap anti-join.
-    n_contaminated = 0
+    # 3. DECONTAM — optional: tag docs sharing a 3-gram with the benchmark.
+    kept = deduped
     if args.benchmark:
         from dff.contamination import contaminated_docs
 
         bench = spark.read.parquet(args.benchmark)
-        bad = contaminated_docs(surv, bench, "doc_id", "text", n=3).select(
-            "doc_id"
+        contam = contaminated_docs(clean, bench, "doc_id", "text", n=3)
+        tagged = tagged.join(
+            contam.select("doc_id", F.lit(True).alias("__contam")),
+            "doc_id",
+            "left",
         )
-        n_contaminated = bad.count()
-        surv = surv.join(bad, "doc_id", "left_anti")
+        kept = deduped & F.col("__contam").isNull()
+    # quality, dedup and decontamination run once, filling this cache
+    tagged = tagged.persist()
 
-    # everything downstream (pool agg, plan agg, sample, append) re-reads
-    # the survivors: persist once so the quality/dedup/decontam stages run
-    # a single time instead of once per consumer
-    surv = surv.persist()
+    # 4. MIXTURE — one aggregate (one row per source) gives every stage
+    # count, the default weights and the availability the plan needs.
+    def n_where(cond):
+        return F.count(F.when(cond, 1))
 
-    # 4. MIXTURE — budget as a fraction of the surviving pool's chars.
-    if args.weights:
-        weights = {k: float(v) for k, v in json.loads(args.weights).items()}
-    else:
-        srcs = [r[0] for r in surv.select("source").distinct().collect()]
-        weights = {s: 1.0 for s in srcs}  # bounded: one row per domain
-    pool = surv.where(F.col("source").isin(list(weights)))
-    total = pool.agg(F.sum(F.col("n_chars").cast("long"))).collect()[0][0] or 0
-    # surv's cache is filled now; clean and the quality audit's caches
+    stats = (
+        tagged.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            n_where(exact_kept).alias("n_dedup"),
+            n_where(exact_kept & ~deduped).alias("n_semantic"),
+            n_where(deduped & ~kept).alias("n_contam"),
+            n_where(kept).alias("n_kept"),
+            F.sum(F.when(kept, F.col("n_chars").cast("long"))).alias("avail"),
+        )
+        .collect()
+    )
+    # tagged's cache is filled now; clean and the quality audit's caches
     # are dead weight
     clean.unpersist()
     qres.unpersist()
-    budget = int(int(total) * args.budget_frac)
-    plan = mixture_plan(pool, "source", "n_chars", weights, budget)
-    mixed = mixture_sample(pool, "source", ["doc_id"], plan, seed=args.seed)
+    n_quality = sum(r["n"] for r in stats)
+    n_dedup = sum(r["n_dedup"] for r in stats)
+    n_semantic_dropped = sum(r["n_semantic"] for r in stats)
+    n_contaminated = sum(r["n_contam"] for r in stats)
+    if args.weights:
+        weights = {k: float(v) for k, v in json.loads(args.weights).items()}
+    else:
+        weights = {r["source"]: 1.0 for r in stats if r["n_kept"]}
+    avail = {r["source"]: r["avail"] for r in stats if r["source"] is not None}
+    # budget as a fraction of the surviving chars of every weighted source
+    total = sum(avail[d] or 0 for d in weights if d in avail)
+    budget = int(total * args.budget_frac)
+    plan = mixture_plan_from_avail(avail, weights, budget)
+    surv = tagged.where(kept).select(*clean.columns)
+    mixed = mixture_sample(surv, "source", ["doc_id"], plan, seed=args.seed)
 
     # 5. PACK — fixed-length context layout over the sampled multiset.
     packed = pack_sequences(
@@ -237,7 +287,7 @@ def main(argv: list[str] | None = None) -> dict:
         .agg(F.sum("c"))
         .collect()[0][0]
     )
-    surv.unpersist()
+    tagged.unpersist()
     out = {
         "rows_raw": n_raw,
         "rows_quality": n_quality,

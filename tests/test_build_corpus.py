@@ -1,6 +1,8 @@
 """End-to-end corpus build (jobs/build_corpus.py): quality gate -> exact
 dedup -> decontamination -> mixture -> packing -> WAP publish, with the
-published layout internally consistent and low-quality docs never packed."""
+published layout internally consistent and low-quality docs never packed,
+every stage count equal to a stage-by-stage recomputation, and the whole
+build within a fixed Spark job budget."""
 
 from __future__ import annotations
 
@@ -18,30 +20,51 @@ sys.path.insert(
     ),
 )
 
+from dff.contamination import contaminated_docs  # noqa: E402
+from dff.dedup import dedup_exact  # noqa: E402
+from dff.mixing import mixture_plan, mixture_sample  # noqa: E402
 from dff.tablefmt import Table  # noqa: E402
+from dff.textops import quality_score, repetition_ratio  # noqa: E402
+
+#: Spark jobs one build_corpus.main() over the 400-doc fixture (with a
+#: benchmark, no embeddings) may run: the quality audit's validate(), the
+#: tagged frame's fill and its one per-source aggregate, the mixture sample
+#: and packing, the branch append, the layout audit, publish and the
+#: context total.
+MAIN_JOB_BUDGET = 38
+
+
+def _text(i):
+    # doc 7 is junk (too short), docs 20/21 are exact duplicates
+    if i == 7:
+        return "tiny"
+    if i == 21:
+        i = 20
+    return " ".join(f"tok{i}x{j}" for j in range(30))
+
+
+def _write_docs(spark, tmp_path, rows):
+    """Write ``rows`` as the documents, and doc 30's text as the benchmark."""
+    df = spark.createDataFrame(
+        [(i, t, s, len(t)) for i, t, s in rows],
+        ["doc_id", "text", "source", "n_chars"],
+    )
+    src = str(tmp_path / "docs")
+    df.write.parquet(src)
+    bench = df.where(F.col("doc_id") == 30).select("doc_id", "text")
+    bench_p = str(tmp_path / "bench")
+    bench.write.parquet(bench_p)
+    return src, bench_p
+
+
+BASE_ROWS = [(i, _text(i), f"s{i % 4}") for i in range(400)]
 
 
 @pytest.fixture()
 def corpus_src(spark, tmp_path):
     # 400 docs over 4 sources; doc 7 is junk (too short), docs 20/21 are
     # exact duplicates, doc 30 replays the benchmark doc verbatim
-    def text(i):
-        if i == 7:
-            return "tiny"
-        if i == 21:
-            i = 20
-        return " ".join(f"tok{i}x{j}" for j in range(30))
-
-    rows = [
-        (i, text(i), f"s{i % 4}", len(text(i)))
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text", "source", "n_chars"])
-    src = str(tmp_path / "docs")
-    df.write.parquet(src)
-    bench = df.where(F.col("doc_id") == 30).select("doc_id", "text")
-    bench_p = str(tmp_path / "bench")
-    bench.write.parquet(bench_p)
+    src, bench_p = _write_docs(spark, tmp_path, BASE_ROWS)
 
     # embeddings: well-spread pseudo-random unit vectors per doc, with
     # docs 50/51 sharing a vector -> semantic dedup must drop 51
@@ -113,3 +136,100 @@ def test_everything_filtered_is_safe(spark, corpus_src):
     assert out["rows_quality"] == 0
     assert out["rows_packed"] == 0
     assert out["mixture"] == {}
+
+
+def _stage_by_stage(spark, src, bench_p, weights, budget_frac, seed):
+    """The build's counts and plan, one stage after another in plain Spark:
+    quality anti join -> dedup_exact -> contaminated_docs -> mixture_plan."""
+    docs = spark.read.parquet(src)
+    scored = docs.withColumn("q", quality_score("text")).withColumn(
+        "r", repetition_ratio("text")
+    )
+    bad = scored.where(
+        F.col("text").isNull()
+        | (F.col("n_chars") < 20)
+        | (F.col("q") < 0.15)
+        | (F.col("r") > 0.9)
+    ).select("doc_id")
+    repeated = docs.groupBy("doc_id").count().where("count > 1").select("doc_id")
+    clean = docs.join(bad.union(repeated), "doc_id", "left_anti")
+    surv = dedup_exact(clean, "text", "doc_id")
+    contam = contaminated_docs(
+        surv, spark.read.parquet(bench_p), "doc_id", "text", n=3
+    )
+    kept = surv.join(contam, "doc_id", "left_anti")
+    pool = kept.where(F.col("source").isin(list(weights)))
+    total = pool.agg(F.sum(F.col("n_chars").cast("long"))).collect()[0][0] or 0
+    budget = int(total * budget_frac)
+    plan = mixture_plan(pool, "source", "n_chars", weights, budget)
+    return {
+        "rows_raw": docs.count(),
+        "rows_quality": clean.count(),
+        "rows_dedup": surv.count(),
+        "rows_semantic_dropped": 0,
+        "rows_contaminated": contam.count(),
+        "budget_chars": budget,
+        "mixture": {
+            d: {"rate": round(s.rate, 6), "copies": s.copies, "avail": s.avail}
+            for d, s in sorted(plan.items())
+        },
+        "rows_packed": mixture_sample(pool, "source", ["doc_id"], plan, seed).count(),
+    }
+
+
+def test_single_pass_counts_match_stage_by_stage(spark, tmp_path):
+    """Edge rows the tag joins must count like the old stage-by-stage
+    anti joins: three identical texts (two losers), a repeated doc_id
+    (every copy fails the quality audit's uniqueness rule), a benchmark
+    replay that is also an exact-dup loser (it is not counted as
+    contaminated: it is already gone), and explicit weights naming an
+    absent domain and a zero-weight one (whose chars still count in the
+    budget's pool)."""
+    import build_corpus
+
+    rows = [r for r in BASE_ROWS if r[0] not in (41, 42, 31)]
+    rows += [
+        (41, _text(40), "s1"),
+        (42, _text(40), "s3"),
+        (31, _text(30), "s2"),
+        (60, _text(460), "s1"),
+    ]
+    src, bench_p = _write_docs(spark, tmp_path, rows)
+    weights = {"s0": 2.0, "s1": 1.0, "s2": 0.0, "s9": 1.0}
+    out = build_corpus.main([
+        "--src", src, "--out", str(tmp_path / "tbl"),
+        "--weights", json.dumps(weights),
+        "--budget-frac", "0.8", "--seq-len", "64", "--n-shards", "4",
+        "--benchmark", bench_p, "--parallelism", "4", "--seed", "5",
+    ])
+    want = _stage_by_stage(spark, src, bench_p, weights, 0.8, 5)
+    assert {k: out[k] for k in want} == want
+    # 401 rows; doc 7 (junk) and both doc 60s fail the audit; 21, 41, 42
+    # and 31 are losers; only doc 30 counts as contaminated
+    assert (want["rows_raw"], want["rows_quality"], want["rows_dedup"]) == (
+        401, 398, 394,
+    )
+    assert want["rows_contaminated"] == 1
+    assert set(want["mixture"]) == {"s0", "s1"}
+    assert out["published"] and out["layout_violations"] == 0
+
+
+def test_main_job_budget(spark, corpus_src):
+    """One build runs each stage once: the whole main() stays within a
+    fixed Spark job budget (regression guard against per-count actions
+    re-running the stages before them)."""
+    import build_corpus
+
+    src, bench_p, _, t_root = corpus_src
+    sc = spark.sparkContext
+    sc.setJobGroup("budget-corpus", "build_corpus.main")
+    try:
+        build_corpus.main([
+            "--src", src, "--out", t_root,
+            "--budget-frac", "0.8", "--seq-len", "64", "--n-shards", "4",
+            "--benchmark", bench_p, "--parallelism", "4", "--seed", "5",
+        ])
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("budget-corpus")
+    assert len(jobs) <= MAIN_JOB_BUDGET, len(jobs)

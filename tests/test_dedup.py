@@ -8,6 +8,7 @@ from dff.dedup import (
     dedup_exact,
     embedding_near_dup_pairs,
     exact_duplicate_groups,
+    exact_duplicate_losers,
     minhash_dedup_pairs,
     minhash_signature,
     ngram_jaccard_pairs,
@@ -43,6 +44,20 @@ def test_exact_dedup(spark):
     kept = dedup_exact(df, "text", "doc_id")
     assert kept.count() == 4
     assert {r["doc_id"] for r in kept.select("doc_id").collect()} == {0, 1, 2, 3}
+
+
+def test_exact_losers_are_distinct_and_drive_dedup_exact(spark):
+    """Three identical copies lose two ids; an id repeated under two losing
+    texts is still listed once, so a left join with the set never
+    multiplies rows; dedup_exact is exactly the anti join with it."""
+    rows = [(0, "a"), (1, "a"), (2, "a"), (3, "b"), (4, "c"), (5, "b"), (5, "c")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    losers = exact_duplicate_losers(df, "text", "doc_id")
+    assert sorted(r["doc_id"] for r in losers.collect()) == [1, 2, 5]
+    tagged = df.join(losers.withColumn("lost", F.lit(True)), "doc_id", "left")
+    assert tagged.count() == len(rows)
+    kept = dedup_exact(df, "text", "doc_id")
+    assert sorted(map(tuple, kept.collect())) == [(0, "a"), (3, "b"), (4, "c")]
 
 
 def test_minhash_estimates_jaccard(spark):

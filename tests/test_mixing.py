@@ -7,7 +7,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dff.mixing import mixture_plan, mixture_sample, mixture_summary
+from dff.mixing import (
+    mixture_plan,
+    mixture_plan_from_avail,
+    mixture_sample,
+    mixture_summary,
+)
 
 
 @pytest.fixture(scope="module")
@@ -114,6 +119,42 @@ def test_empty_plan_and_validation(corpus):
         mixture_plan(corpus, "domain", "tokens", {"web": -0.1}, 100)
     with pytest.raises(ValueError):
         mixture_plan(corpus, "domain", "tokens", {"web": 1.0}, -1)
+
+
+def test_plan_from_avail_matches_plan_without_a_job(spark, corpus):
+    """The driver half reproduces mixture_plan exactly from the same
+    per-domain availability (an absent domain, a zero-weight one, a NULL
+    and a zero availability included) and runs no Spark job."""
+    weights = {"web": 0.5, "wiki": 0.0, "code": 0.25, "nosuch": 0.25}
+    total = corpus.agg(F.sum("tokens")).collect()[0][0]
+    avail = {
+        r["domain"]: r["a"]
+        for r in corpus.groupBy("domain").agg(F.sum("tokens").alias("a")).collect()
+    }
+    for budget, up in ((total // 2, True), (total * 3, True), (total * 3, False)):
+        want = mixture_plan(
+            corpus, "domain", "tokens", weights, budget, allow_upsample=up
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup("plan-from-avail", "driver-only plan")
+        try:
+            got = mixture_plan_from_avail(
+                {**avail, "empty": 0, "unknown": None},
+                {**weights, "empty": 1.0, "unknown": 1.0},
+                budget,
+                allow_upsample=up,
+            )
+        finally:
+            sc._jsc.clearJobGroup()
+        assert got == want
+        assert list(sc.statusTracker().getJobIdsForGroup("plan-from-avail")) == []
+
+
+def test_plan_from_avail_validates():
+    with pytest.raises(ValueError, match="budget"):
+        mixture_plan_from_avail({"web": 10}, {"web": 1.0}, -1)
+    with pytest.raises(ValueError, match="weight"):
+        mixture_plan_from_avail({"web": 10}, {"web": 1.0, "code": -0.5}, 10)
 
 
 def test_map_only_plan(corpus):

@@ -6,7 +6,12 @@ from pyspark.sql import functions as F
 
 import pytest
 
-from dff.checkpoint import CheckpointStore, TableCheckpointStore, plan_pending
+from dff.checkpoint import (
+    CheckpointStore,
+    TableCheckpointStore,
+    ViolationsSink,
+    plan_pending,
+)
 from dff.drift import CategoricalBins, DriftSpec, snapshot
 from dff.ruleset import parse_json
 from dff.runner import ReferentialCheck, ValidationConfig, ValidationRunner
@@ -452,6 +457,31 @@ def test_resume_validates_null_partition_rows(spark, tmp_path):
     null_viols = r.violations.where(F.col("part_id").isNull()).count()
     assert by_part[None]["violations"] == null_viols
     r.unpersist()
+    df.unpersist()
+
+
+def test_violations_sink_reads_back_null_partition_rows(spark, tmp_path):
+    """Violations of NULL-partition rows survive ``ViolationsSink.read``:
+    the last-writer-wins semi join matches the partition null-safe.  NULL
+    rows stay pending on resume, so the second run writes them again, and
+    the read keeps only the newer batch's copy."""
+    df = synthetic_source_files(spark, 3000, n_repos=100).withColumn(
+        "part_id", F.when(F.col("part_id") != 5, F.col("part_id"))
+    ).cache()
+    store = CheckpointStore(spark, str(tmp_path / "ckpt"))
+    viol = str(tmp_path / "viol")
+    runner = make_runner(spark, df, snapshot_id="snap-V")
+    null_rows = F.col("part_id").isNull()
+    runner.run(df.where(null_rows), store, violations_path=viol).unpersist()
+    r = runner.run(df, store, violations_path=viol)
+    cols = r.violations.columns
+    want = sorted(map(tuple, r.violations.where(null_rows).collect()))
+    assert want
+    r.unpersist()
+    assert len(_batch_dirs(viol)) == 2
+    got = ViolationsSink(spark, viol, "part_id").read()
+    assert sorted(map(tuple, got.where(null_rows).select(*cols).collect())) == want
+    assert got.where(F.col("part_id") == 1).count() > 0
     df.unpersist()
 
 

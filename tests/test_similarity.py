@@ -212,3 +212,53 @@ def test_ivf_training_sample_is_partition_invariant(spark):
     cells_a = sorted(map(tuple, a.assigned.select("item_id", "cell").collect()))
     cells_b = sorted(map(tuple, b.assigned.select("item_id", "cell").collect()))
     assert cells_a == cells_b
+
+
+def test_ivf_training_sample_ignores_null_ids(spark):
+    """Rows with a NULL item id are never sampled for centroid training, in
+    either pass: adding them leaves the trained centroids unchanged."""
+    import numpy as np
+
+    from dff.similarity import build_ivf_index
+
+    items = spark.read.parquet(EMB)
+    nulls = items.where(F.col("vec_id") % 5 == 0).withColumn(
+        "vec_id", F.lit(None).cast("long")
+    )
+    a = build_ivf_index(items, n_centroids=4)
+    b = build_ivf_index(items.unionByName(nulls), n_centroids=4)
+    assert np.array_equal(a.centroids, b.centroids)
+
+
+def test_ivf_training_sample_rejects_nondeterministic_source(spark):
+    """The two sample passes must see the same ids; a source that
+    re-draws its ids per evaluation fails with a clear error instead of a
+    KeyError from the sort."""
+    import random
+
+    import pytest
+
+    from dff.similarity import build_ivf_index
+
+    draw = F.udf(lambda: random.getrandbits(40), "long").asNondeterministic()
+    items = spark.read.parquet(EMB).withColumn("vec_id", draw())
+    with pytest.raises(ValueError, match="must be deterministic"):
+        build_ivf_index(items, n_centroids=4)
+
+
+def test_ivf_training_sample_needs_no_lateral_alias(spark):
+    """The sample hash is defined on the source id column, so the build
+    resolves with lateral column alias resolution switched off."""
+    import numpy as np
+
+    from dff.similarity import build_ivf_index
+
+    items = spark.read.parquet(EMB)
+    key = "spark.sql.lateralColumnAlias.enableImplicitResolution"
+    a = build_ivf_index(items, n_centroids=4)
+    spark.conf.set(key, "false")
+    try:
+        b = build_ivf_index(items, n_centroids=4)
+    finally:
+        spark.conf.unset(key)
+    assert np.array_equal(a.centroids, b.centroids)
