@@ -6,12 +6,14 @@ buckets for ALL tracked columns as ``sum(case when ...)`` expressions —
 no per-column scans, no global sort.  The KS statistic is computed from the
 binned empirical CDFs (shared bin edges with PSI), deliberately avoiding
 ``cume_dist`` over a global ``Window.orderBy`` which would single-task the
-table (SURVEY.md §7.3).  The final small-statistics math (PSI/KS/JS over a
-few dozen bucket counts per partition) runs where the counts already are:
-the validation runner collects its n_parts histogram rows anyway and
-applies the numpy :func:`psi` / :func:`ks_binned` / :func:`js_divergence`
-on the driver; :func:`drift_by_partition` keeps the statistics distributed
-as Catalyst arithmetic with the baseline folded into literals.
+table (SURVEY.md §7.3).  The statistics themselves (PSI/KS/JS over a few
+dozen bucket counts per partition) have ONE realization, on the driver:
+:func:`drift_statistics` applies the numpy :func:`psi` / :func:`ks_binned`
+/ :func:`js_divergence` to the collected ``n_parts`` histogram rows.  The
+validation runner and :func:`drift_by_partition` both call it.  (A
+Python-worker realization paid a per-task boundary cost for kilobytes of
+work — 17.8 s at local[8] — and a Catalyst-expression one cost more
+driver planning time than the whole computation.)
 
 Exact KS is also provided for small-scale test verification.
 """
@@ -21,10 +23,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 @dataclass(frozen=True)
@@ -126,14 +129,17 @@ def snapshot(df: DataFrame, spec: DriftSpec) -> dict[str, np.ndarray]:
     }
 
 
+def _smoothed(expected: np.ndarray, actual: np.ndarray, eps: float):
+    """Both histograms as probabilities, clipped to ``eps`` and
+    renormalized (an all-zero histogram becomes uniform)."""
+    p = np.clip(expected / max(expected.sum(), 1.0), eps, None)
+    q = np.clip(actual / max(actual.sum(), 1.0), eps, None)
+    return p / p.sum(), q / q.sum()
+
+
 def psi(expected: np.ndarray, actual: np.ndarray, eps: float = 1e-6) -> float:
     """Population Stability Index with epsilon smoothing."""
-    p = expected / max(expected.sum(), 1.0)
-    q = actual / max(actual.sum(), 1.0)
-    p = np.clip(p, eps, None)
-    q = np.clip(q, eps, None)
-    p = p / p.sum()
-    q = q / q.sum()
+    p, q = _smoothed(expected, actual, eps)
     return float(np.sum((q - p) * np.log(q / p)))
 
 
@@ -144,12 +150,7 @@ def js_divergence(
     the SAME clip->renormalize smoothing as :func:`psi` — symmetric and
     bounded where PSI is neither, the better alarm metric when either
     side can have empty buckets."""
-    p = expected / max(expected.sum(), 1.0)
-    q = actual / max(actual.sum(), 1.0)
-    p = np.clip(p, eps, None)
-    q = np.clip(q, eps, None)
-    p = p / p.sum()
-    q = q / q.sum()
+    p, q = _smoothed(expected, actual, eps)
     m = (p + q) / 2.0
     return float(0.5 * np.sum(p * np.log(p / m)) + 0.5 * np.sum(q * np.log(q / m)))
 
@@ -182,7 +183,10 @@ def chisq_drift(
     literal frame broadcast into a full outer join so categories MISSING
     from the new data still contribute their expectation (a vanished
     category is drift, not a free pass).  Categories absent from the
-    baseline are skipped, mirroring :func:`chi_square`.
+    baseline contribute no term, but their rows still count in ``n`` and
+    in the total the baseline is rescaled to — unlike :func:`chi_square`
+    over baseline-aligned arrays, whose total holds only the baseline
+    categories' rows.
     """
     spark = df.sparkSession
     actual = df.groupBy(F.col(col).alias("__cat")).agg(
@@ -265,159 +269,49 @@ def partition_histograms(
     return src.groupBy(part_col).agg(*histogram_exprs(spec), *(extra_aggs or []))
 
 
-def _column_drift_exprs(
-    bins, baseline: dict[str, np.ndarray], eps: float = 1e-6
-) -> tuple[Column, Column, Column]:
-    """(psi, ks, js) Catalyst expressions for one tracked column,
-    replicating :func:`psi` / :func:`ks_binned` / :func:`js_divergence`
-    term by term with the baseline side folded into literals (it is
-    constant across every partition row).
-
-    Realized with ARRAY higher-order functions, not unrolled per-bucket
-    arithmetic: an unrolled form re-inlines the normalizer sum inside
-    every bucket's term, so the expression tree grows O(n_buckets^2) —
-    and tripling it for JS pushed the (driver-side) optimize+codegen cost
-    of the metrics query from ~5s to ~14s on the 500k-row bench (the
-    frame is tiny; COMPILATION was the cost).  HOF lambdas are one
-    runtime-looped expression instance each, so the tree stays O(n) and
-    the left-to-right fold order — hence the float result — is identical
-    to the unrolled form."""
-    h_arr = F.array(
-        *[
-            F.coalesce(
-                F.col(f"h__{bins.column}__{b}").cast("double"), F.lit(0.0)
-            )
-            for b in range(bins.n_buckets)
-        ]
-    )
-    base = np.asarray(baseline[bins.column], dtype=np.float64)
-    p = base / max(base.sum(), 1.0)
-    p_psi = np.clip(p, eps, None)
-    p_psi = p_psi / p_psi.sum()
-    p_cdf = np.cumsum(p)
-    p_psi_arr = F.array(*[F.lit(float(v)) for v in p_psi])
-    p_cdf_arr = F.array(*[F.lit(float(v)) for v in p_cdf])
-
-    def asum(arr):
-        return F.aggregate(arr, F.lit(0.0), lambda a, x: a + x)
-
-    qt = F.greatest(asum(h_arr), F.lit(1.0))
-    q = F.transform(h_arr, lambda x: x / qt)
-    # psi: clip -> renormalize -> sum((q-p) * ln(q/p))
-    qc = F.transform(q, lambda x: F.greatest(x, F.lit(eps)))
-    qs = asum(qc)
-    psi_expr = asum(
-        F.zip_with(
-            qc, p_psi_arr, lambda c, pb: (c / qs - pb) * F.log(c / qs / pb)
-        )
-    )
-    # js: 0.5*KL(p||m) + 0.5*KL(q||m), m = (p+q)/2, same clipped inputs
-    js_expr = asum(
-        F.zip_with(
-            qc,
-            p_psi_arr,
-            lambda c, pb: (
-                pb * F.log(pb / ((pb + c / qs) / 2)) * 0.5
-                + (c / qs) * F.log((c / qs) / ((pb + c / qs) / 2)) * 0.5
-            ),
-        )
-    )
-    # ks: max |cdf(p) - cdf(q)| — a running-sum fold over (q_b, p_cdf_b)
-    ks_expr = F.aggregate(
-        F.zip_with(
-            q,
-            p_cdf_arr,
-            lambda qb, pc: F.struct(qb.alias("q"), pc.alias("pc")),
-        ),
-        F.struct(F.lit(0.0).alias("run"), F.lit(0.0).alias("maxd")),
-        lambda acc, x: F.struct(
-            (acc["run"] + x["q"]).alias("run"),
-            F.greatest(
-                acc["maxd"], F.abs(acc["run"] + x["q"] - x["pc"])
-            ).alias("maxd"),
-        ),
-        lambda acc: acc["maxd"],
-    )
-    return psi_expr, ks_expr, js_expr
-
-
-def drift_from_histograms(
-    hist: DataFrame,
+def drift_statistics(
+    hist_rows: list,
     part_col: str,
     spec: DriftSpec,
     baseline: dict[str, np.ndarray],
-) -> DataFrame:
-    """PSI/KS per (partition, column) from precomputed bucket counts.
+) -> tuple[list[tuple], list[tuple]]:
+    """PSI/KS/JS of each collected :func:`partition_histograms` row vs the
+    baseline, on the driver: the one realization of the drift statistics.
 
-    Pure Catalyst: a map-only projection over the (tiny) histogram frame —
-    the baseline side is constant-folded into literals and the statistics
-    are ordinary arithmetic over a few dozen bucket counts, so NO shuffle
-    and NO Python worker run here.  The previous ``applyInPandas``
-    realization was numerically fine but each of its ``shuffle.partitions``
-    tasks paid a Python-worker round-trip for kilobytes of work — measured
-    17.8s at local[8] vs 4s at local[2] on this host (the task count grows
-    with parallelism while the work doesn't), which single-handedly sank
-    the N->4N scaling gate.  Expressions make the cost ~0 at ANY
-    parallelism; :func:`drift_from_histograms_pandas` is kept as the
-    numpy cross-check used by the parity test.
-
-    The validation runner no longer uses this: it collects its histogram
-    rows for the per-partition verdicts anyway and applies the numpy
-    statistics to them on the driver (building this expression tree cost
-    more driver time than the whole metrics computation).
-    :func:`drift_by_partition` is its remaining caller.
+    Returns ``(drift, worst)``: one ``DRIFT_RESULT_SCHEMA`` tuple per (row,
+    tracked column) — a NULL partition key gives ``part_id`` NULL, a NULL
+    bucket count reads as 0 — and ``worst[i]``, ``hist_rows[i]``'s (max
+    PSI, max KS), ``(None, None)`` when ``spec`` tracks no column.
     """
-    pairs = []
-    for bins in spec.all_bins:
-        psi_e, ks_e, js_e = _column_drift_exprs(bins, baseline)
-        pairs.append(
-            F.struct(
-                F.lit(bins.column).alias("column"),
-                psi_e.alias("psi"),
-                ks_e.alias("ks"),
-                js_e.alias("js"),
+    drift, worst = [], []
+    for r in hist_rows:
+        p = r[part_col]
+        stats = []
+        for bins in spec.all_bins:
+            hist = np.array(
+                [r[f"h__{bins.column}__{b}"] or 0 for b in range(bins.n_buckets)],
+                dtype=np.float64,
             )
-        )
-    return hist.select(
-        F.col(part_col).cast("int").alias("part_id"),
-        F.inline(F.array(*pairs)),
+            base = np.asarray(baseline[bins.column], dtype=np.float64)
+            stats.append(
+                (psi(base, hist), ks_binned(base, hist), js_divergence(base, hist))
+            )
+            drift.append((None if p is None else int(p), bins.column, *stats[-1]))
+        worst.append((
+            max((s[0] for s in stats), default=None),
+            max((s[1] for s in stats), default=None),
+        ))
+    return drift, worst
+
+
+def _local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
+    """``rows`` as a DataFrame that lives on the driver: built through an
+    Arrow table it plans as a LocalRelation, so collecting it, or anything
+    else computed from it alone, runs no Spark job."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
-
-
-def drift_from_histograms_pandas(
-    hist: DataFrame,
-    part_col: str,
-    spec: DriftSpec,
-    baseline: dict[str, np.ndarray],
-) -> DataFrame:
-    """numpy reference realization of :func:`drift_from_histograms`
-    (Arrow-batched ``applyInPandas``); retained for parity testing."""
-    bins_meta = [(b.column, b.n_buckets) for b in spec.all_bins]
-    baseline_plain = {k: v.tolist() for k, v in baseline.items()}
-
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, row in pdf.iterrows():
-            for col, n_b in bins_meta:
-                counts = np.array(
-                    [row[f"h__{col}__{b}"] or 0 for b in range(n_b)],
-                    dtype=np.float64,
-                )
-                base = np.array(baseline_plain[col], dtype=np.float64)
-                out.append(
-                    {
-                        "part_id": int(row[part_col]),
-                        "column": col,
-                        "psi": psi(base, counts),
-                        "ks": ks_binned(base, counts),
-                        "js": js_divergence(base, counts),
-                    }
-                )
-        return pd.DataFrame(
-            out, columns=["part_id", "column", "psi", "ks", "js"]
-        )
-
-    return hist.groupBy(part_col).applyInPandas(compute, DRIFT_RESULT_SCHEMA)
+    return spark.createDataFrame(table, schema)
 
 
 def drift_by_partition(
@@ -426,27 +320,18 @@ def drift_by_partition(
     spec: DriftSpec,
     baseline: dict[str, np.ndarray],
 ) -> DataFrame:
-    """Per-partition PSI/KS vs the baseline snapshot.
+    """Per-partition PSI/KS/JS vs the baseline snapshot, as a driver-local
+    frame (reading it runs no Spark job).
 
-    One shuffle total: the ``groupBy(part_col)`` histogram aggregation
-    (map-side combine makes the shuffled volume ``n_parts x n_buckets``
-    longs, independent of row count); the statistics projection on top is
-    map-only.  See :func:`partition_histograms` /
-    :func:`drift_from_histograms` to fuse extra per-partition aggregates
-    into the same scan.
+    One Spark action: collecting the ``groupBy(part_col)`` histogram
+    aggregation (map-side combine makes it ``n_parts x n_buckets`` longs,
+    independent of row count); :func:`drift_statistics` does the rest on
+    the driver.  Use :func:`partition_histograms` directly to fuse extra
+    per-partition aggregates into the same scan.
     """
-    return drift_from_histograms(
-        partition_histograms(df, part_col, spec), part_col, spec, baseline
-    )
-
-
-def content_length_bins(max_log2: int = 24) -> NumericBins:
-    """Log2-spaced edges for content length (bytes 1 .. 16 MiB)."""
-    return NumericBins(
-        column="content_length",
-        edges=tuple(float(2**i) for i in range(0, max_log2, 2)),
-        expr="length(content)",
-    )
+    rows = partition_histograms(df, part_col, spec).collect()
+    drift, _ = drift_statistics(rows, part_col, spec, baseline)
+    return _local_frame(df.sparkSession, drift, DRIFT_RESULT_SCHEMA)
 
 
 def auto_numeric_bins(
@@ -457,8 +342,8 @@ def auto_numeric_bins(
     accuracy: int = 10000,
 ) -> NumericBins:
     """Derive equi-depth bin edges for :class:`NumericBins` from a baseline
-    frame — hand-tuned edges (e.g. ``content_length_bins``) stop being a
-    requirement for tracking a new column.
+    frame — hand-tuned edges stop being a requirement for tracking a new
+    column.
 
     Interior edges are the column's ``1/n .. (n-1)/n`` approximate
     quantiles (Greenwald-Khanna, one pass, mergeable), deduplicated (a hot

@@ -30,22 +30,19 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 from .checkpoint import CheckpointStore, ViolationsSink, plan_pending
 from .compiler import ScorerRegistry, compile_ruleset
 from .drift import (
     DRIFT_RESULT_SCHEMA,
     DriftSpec,
+    _local_frame,
     bucket_projection,
-    js_divergence,
-    ks_binned,
+    drift_statistics,
     partition_histograms,
-    psi,
 )
 from .ruleset import RuleSet
 
@@ -136,16 +133,6 @@ def _metrics_schema(part_col: str, part_type: T.DataType) -> T.StructType:
         T.StructField("max_ks", T.DoubleType()),
         T.StructField("verdict", T.StringType(), False),
     ])
-
-
-def _local_frame(spark, rows: list, schema: T.StructType) -> DataFrame:
-    """``rows`` as a DataFrame that lives on the driver: built through an
-    Arrow table it plans as a LocalRelation, so collecting it, or anything
-    else computed from it alone, runs no Spark job."""
-    table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(table, schema)
 
 
 class ValidationRunner:
@@ -388,7 +375,7 @@ class ValidationRunner:
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        metric_rows, drift_rows = self._rollup(part_rows, viol_counts)
+        metric_rows, drift_rows = self._rollup(part_rows, viol_counts, has_drift)
         spark = df.sparkSession
         metrics = _local_frame(
             spark, metric_rows, _metrics_schema(part, base.schema[part].dataType)
@@ -404,9 +391,12 @@ class ValidationRunner:
             _metric_rows=tuple(metric_rows),
         )
 
-    def _rollup(self, part_rows: list, viol_counts: list) -> tuple[list, list]:
+    def _rollup(
+        self, part_rows: list, viol_counts: list, has_drift: bool
+    ) -> tuple[list, list]:
         """Per-partition metrics rows (the ``partition_metrics`` columns)
-        and drift rows (``DRIFT_RESULT_SCHEMA``) from the collected
+        and drift rows (``DRIFT_RESULT_SCHEMA``, from
+        :func:`~dff.drift.drift_statistics`) from the collected
         histogram/row-count aggregate and per-(partition, constraint)
         violation counts.  A partition fails on any violation or when its
         worst column's PSI or KS exceeds the configured threshold."""
@@ -414,29 +404,16 @@ class ValidationRunner:
         counts: dict = {}
         for p, c, n in viol_counts:
             counts.setdefault(p, {})[c] = n
-        has_drift = cfg.drift_spec is not None and cfg.drift_baseline is not None
-        bins_list = cfg.drift_spec.all_bins if has_drift else []
-        baseline = {
-            b.column: np.asarray(cfg.drift_baseline[b.column], dtype=np.float64)
-            for b in bins_list
-        }
-        metrics, drift = [], []
-        for r in part_rows:
+        drift, worst = drift_statistics(
+            part_rows,
+            cfg.part_col,
+            cfg.drift_spec if has_drift else DriftSpec(),
+            cfg.drift_baseline if has_drift else {},
+        )
+        metrics = []
+        for r, (max_psi, max_ks) in zip(part_rows, worst):
             p = r[cfg.part_col]
-            stats = []
-            for bins in bins_list:
-                hist = np.array(
-                    [r[f"h__{bins.column}__{b}"] or 0 for b in range(bins.n_buckets)],
-                    dtype=np.float64,
-                )
-                ref = baseline[bins.column]
-                stats.append(
-                    (psi(ref, hist), ks_binned(ref, hist), js_divergence(ref, hist))
-                )
-                drift.append((None if p is None else int(p), bins.column, *stats[-1]))
-            max_psi = max((s[0] for s in stats), default=None)
-            max_ks = max((s[1] for s in stats), default=None)
-            drifted = bool(stats) and (
+            drifted = max_psi is not None and (
                 max_psi > cfg.psi_threshold or max_ks > cfg.ks_threshold
             )
             by_c = counts.get(p)

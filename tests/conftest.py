@@ -30,3 +30,22 @@ def spark():
     )
     yield session
     session.stop()
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_streaming_queries():
+    """Fail a test that leaves a streaming query running, and stop the
+    query so later tests neither fail for it nor share its cores.  Looks
+    only at an already-running session; starts none."""
+    yield
+    session = SparkSession.getActiveSession()
+    if session is None:
+        return
+    leaked = session.streams.active
+    for q in leaked:
+        q.stop()
+    if leaked:
+        pytest.fail(
+            f"test left {len(leaked)} streaming queries active: "
+            + ", ".join(q.name or str(q.id) for q in leaked)
+        )

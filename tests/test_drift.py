@@ -3,8 +3,10 @@ from __future__ import annotations
 import math
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from dff.drift import (
+    DRIFT_RESULT_SCHEMA,
     CategoricalBins,
     DriftSpec,
     NumericBins,
@@ -82,58 +84,57 @@ def test_drifted_partition_flagged(spark):
     assert (len_ks.drop(3) < 0.12).all()
 
 
-def test_expr_drift_matches_pandas_reference(spark):
-    """The Catalyst-expression PSI/KS must agree with the numpy reference
-    realization term for term (same clipping/renormalization), including on
-    empty and single-bucket-dominated partitions."""
-    from pyspark.sql import functions as F
+def test_drift_statistics_matches_numpy_on_hand_built_rows():
+    """The one drift realization equals psi / ks_binned / js_divergence
+    applied by hand, on an ordinary, an all-zero and a NULL-count row and
+    on a NULL partition key (which comes back as part_id NULL)."""
+    from pyspark.sql import Row
 
-    from dff.drift import (
-        drift_from_histograms,
-        drift_from_histograms_pandas,
-        partition_histograms,
-    )
+    from dff.drift import drift_statistics, js_divergence
 
-    spec = _spec()
-    base_df = synthetic_source_files(spark, 8000, n_repos=50, plant_violations=False)
-    baseline = snapshot(base_df, spec)
-    cur = synthetic_source_files(
-        spark, 8000, n_repos=50, plant_violations=False, drift_part=2
+    spec = DriftSpec(
+        numeric=[NumericBins(column="x", edges=(1.0, 2.0, 4.0))],
+        categorical=[CategoricalBins(column="c", categories=("a", "b"))],
     )
-    hist = partition_histograms(cur, "part_id", spec)
-    got = (
-        drift_from_histograms(hist, "part_id", spec, baseline)
-        .toPandas()
-        .sort_values(["part_id", "column"])
-        .reset_index(drop=True)
+    baseline = {"x": np.array([5.0, 10.0, 20.0, 5.0]), "c": np.array([30.0, 8.0, 2.0])}
+    counts = {
+        1: {"x": [1, 9, 25, 5], "c": [10, 20, 10]},
+        2: {"x": [0, 0, 0, 0], "c": [0, 0, 0]},
+        3: {"x": [None, 4, None, 1], "c": [7, None, 0]},
+        None: {"x": [2, 2, 2, 2], "c": [1, 1, 1]},
+    }
+    rows = [
+        Row(
+            part_id=p,
+            **{f"h__{col}__{b}": n for col, h in hs.items() for b, n in enumerate(h)},
+        )
+        for p, hs in counts.items()
+    ]
+    drift, worst = drift_statistics(rows, "part_id", spec, baseline)
+
+    assert [(d[0], d[1]) for d in drift] == [
+        (p, col) for p in counts for col in ("x", "c")
+    ]
+    got = {(d[0], d[1]): d[2:] for d in drift}
+    for p, hs in counts.items():
+        for col, h in hs.items():
+            actual = np.array([n or 0 for n in h], dtype=np.float64)
+            want = (
+                psi(baseline[col], actual),
+                ks_binned(baseline[col], actual),
+                js_divergence(baseline[col], actual),
+            )
+            assert got[(p, col)] == want, (p, col)
+        assert worst[list(counts).index(p)] == (
+            max(got[(p, c)][0] for c in hs), max(got[(p, c)][1] for c in hs)
+        )
+    # an all-zero partition scores as the uniform eps-smoothed histogram,
+    # finite and non-negative
+    assert all(np.isfinite(v) and v >= 0 for v in got[(2, "x")])
+    # no tracked column: no drift rows, no worst statistics
+    assert drift_statistics(rows, "part_id", DriftSpec(), {}) == (
+        [], [(None, None)] * len(rows)
     )
-    want = (
-        drift_from_histograms_pandas(hist, "part_id", spec, baseline)
-        .toPandas()
-        .sort_values(["part_id", "column"])
-        .reset_index(drop=True)
-    )
-    assert list(got["part_id"]) == list(want["part_id"])
-    assert list(got["column"]) == list(want["column"])
-    assert np.allclose(got["psi"], want["psi"], rtol=0, atol=1e-9)
-    assert np.allclose(got["ks"], want["ks"], rtol=0, atol=1e-9)
-    assert np.allclose(got["js"], want["js"], rtol=0, atol=1e-9)
-    # all-empty histogram row: both sides must agree (qt clamps to 1)
-    empty = hist.limit(1).select(
-        F.lit(99).alias("part_id"),
-        *[
-            F.lit(0).cast("long").alias(c)
-            for c in hist.columns
-            if c.startswith("h__")
-        ],
-    )
-    ge = drift_from_histograms(empty, "part_id", spec, baseline).toPandas()
-    we = drift_from_histograms_pandas(empty, "part_id", spec, baseline).toPandas()
-    ge = ge.sort_values("column").reset_index(drop=True)
-    we = we.sort_values("column").reset_index(drop=True)
-    assert np.allclose(ge["psi"], we["psi"], atol=1e-9)
-    assert np.allclose(ge["ks"], we["ks"], atol=1e-9)
-    assert np.allclose(ge["js"], we["js"], atol=1e-9)
 
 
 def test_js_divergence_properties():
@@ -152,20 +153,39 @@ def test_js_divergence_properties():
     assert 0.0 < js <= np.log(2) + 1e-9
 
 
-def test_drift_projection_is_shuffle_free(spark):
-    """drift_from_histograms on top of the histogram agg must add NO extra
-    Exchange: the whole per-partition drift plan contains exactly the one
-    histogram-aggregation shuffle and no Python evaluation node."""
-    from dff.drift import drift_from_histograms, partition_histograms
+def test_drift_by_partition_job_budget(spark):
+    """drift_by_partition runs no more Spark jobs than collecting the
+    histogram aggregate it is built on, and its result is a driver-local
+    frame: reading it runs no job.  A NULL partition key comes back as
+    part_id NULL."""
+    from dff.drift import partition_histograms
 
     spec = _spec()
     base_df = synthetic_source_files(spark, 2000, n_repos=20, plant_violations=False)
     baseline = snapshot(base_df, spec)
-    hist = partition_histograms(base_df, "part_id", spec)
-    drift = drift_from_histograms(hist, "part_id", spec, baseline)
-    plan = drift._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 1, plan
-    assert "FlatMapGroupsInPandas" not in plan and "EvalPython" not in plan, plan
+    null_part = base_df.limit(3).withColumn("part_id", F.lit(None).cast("int"))
+    df = base_df.unionByName(null_part)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("drift-hist", "partition_histograms collect")
+        partition_histograms(df, "part_id", spec).collect()
+        sc.setJobGroup("drift-by-part", "drift_by_partition")
+        drift = drift_by_partition(df, "part_id", spec, baseline)
+        sc.setJobGroup("drift-read", "read the result")
+        rows = drift.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    n_hist = len(tracker.getJobIdsForGroup("drift-hist"))
+    assert 0 < len(tracker.getJobIdsForGroup("drift-by-part")) <= n_hist
+    assert len(tracker.getJobIdsForGroup("drift-read")) == 0
+    assert drift.schema == DRIFT_RESULT_SCHEMA
+    assert {r["column"] for r in rows if r["part_id"] is None} == {
+        "content_length", "lang"
+    }
+    # empty input: an empty frame with the same schema
+    empty = drift_by_partition(df.limit(0), "part_id", spec, baseline)
+    assert empty.schema == DRIFT_RESULT_SCHEMA and empty.collect() == []
 
 
 def test_chi_square_numpy_and_distributed_agree(spark):
@@ -197,9 +217,10 @@ def test_chi_square_missing_and_extra_categories(spark):
     )
     got = chisq_drift(df, "cat", base).first()
     e = np.array([100.0, 100.0, 50.0])
-    a = np.array([120.0, 80.0, 0.0])  # 'x' skipped (no baseline evidence)
-    # numpy twin rescales by the FULL actual total incl. 'x' rows? No:
-    # chisq_drift's na includes only rows, and 'x' contributes to na.
+    a = np.array([120.0, 80.0, 0.0])  # 'x' has no term (no baseline evidence)
+    # ...but its 10 rows still count in n and in the rescaling total: the
+    # baseline is scaled to all 210 current rows, not to the 200 rows of
+    # baseline categories (chi_square over these aligned arrays would use 200)
     scaled = e * (210.0 / e.sum())
     want = float(np.sum((a - scaled) ** 2 / scaled))
     assert abs(got["chi2"] - want) < 1e-9

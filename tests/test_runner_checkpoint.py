@@ -500,9 +500,9 @@ def test_complete_store_run_returns_none_and_writes_nothing(spark, tmp_path):
 
 def test_run_checkpoint_rows_and_drift_match_validate(spark, tmp_path):
     """run()'s committed checkpoint rows equal checkpoint_rows() over a
-    plain validate() of the same input, and the driver-side drift
-    statistics equal the Catalyst realization on the same histograms."""
-    from dff.drift import drift_from_histograms, partition_histograms
+    plain validate() of the same input, and validate()'s drift rows equal
+    drift_statistics over a separate collect of the same histograms."""
+    from dff.drift import drift_statistics, partition_histograms
 
     df = synthetic_source_files(spark, 4000, n_repos=100, drift_part=5).cache()
     runner = make_runner(spark, df, with_drift=True, snapshot_id="snap-M")
@@ -523,13 +523,11 @@ def test_run_checkpoint_rows_and_drift_match_validate(spark, tmp_path):
     verdict = {m["part_id"]: m["verdict"] for m in v.partition_metrics.collect()}
     assert verdict[5] == "fail"
 
-    hist = partition_histograms(df, "part_id", cfg.drift_spec)
-    want = {
-        (d["part_id"], d["column"]): d
-        for d in drift_from_histograms(
-            hist, "part_id", cfg.drift_spec, cfg.drift_baseline
-        ).collect()
-    }
+    hist = partition_histograms(df, "part_id", cfg.drift_spec).collect()
+    drift, _ = drift_statistics(
+        hist, "part_id", cfg.drift_spec, cfg.drift_baseline
+    )
+    want = {(d[0], d[1]): dict(zip(("psi", "ks", "js"), d[2:])) for d in drift}
     got = {(d["part_id"], d["column"]): d for d in v.drift.collect()}
     assert set(got) == set(want)
     for k, d in got.items():

@@ -25,6 +25,15 @@ SPEC = {
 }
 
 
+def _drain(q):
+    """Wait for an ``availableNow`` query to finish, and stop it whatever
+    happens, so no query outlives its test."""
+    try:
+        assert q.awaitTermination(120), f"query {q.name or q.id} still running"
+    finally:
+        q.stop()
+
+
 def test_stream_batches_match_batch_run(spark, tmp_path):
     src = synthetic_source_files(spark, 3000, n_repos=50)
     src_path = str(tmp_path / "src")
@@ -47,7 +56,7 @@ def test_stream_batches_match_batch_run(spark, tmp_path):
         .parquet(src_path)
     )
     q = validate_stream(stream, runner, sink, str(tmp_path / "sck"))
-    q.awaitTermination(120)
+    _drain(q)
 
     batch_df = spark.read.parquet(src_path)
     batch = runner.validate(batch_df, persist_violations=False)
@@ -105,7 +114,7 @@ def test_windowed_violation_counts_drops_late_data(spark, tmp_path):
         .option("checkpointLocation", ck)
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     got1 = {
         (r["window"]["start"].minute, r["verdict_id"]): r["n"] for r in rows1
     }
@@ -127,7 +136,7 @@ def test_windowed_violation_counts_drops_late_data(spark, tmp_path):
         .option("checkpointLocation", ck)
         .trigger(availableNow=True).start()
     )
-    q2.awaitTermination(120)
+    _drain(q2)
     got2 = {
         (r["window"]["start"].minute, r["verdict_id"]): r["n"] for r in rows2
     }
@@ -155,7 +164,7 @@ def test_sessionize_events_stateful_counts(spark, tmp_path):
         .option("checkpointLocation", ck)
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     got = {r["user_id"]: r for r in srows1}
     assert got[1]["n_events"] == 3 and not got[1]["closed"]
     assert got[1]["first_ts"] == dt.datetime(2026, 1, 1, 9, 0)
@@ -173,9 +182,79 @@ def test_sessionize_events_stateful_counts(spark, tmp_path):
         .option("checkpointLocation", ck)
         .trigger(availableNow=True).start()
     )
-    q2.awaitTermination(120)
+    _drain(q2)
     got2 = {r["user_id"]: r for r in srows2}
     assert got2[1]["n_events"] == 4 and got2[1]["last_ts"] == dt.datetime(2026, 1, 1, 9, 5)
+
+
+def _sessionize_run(spark, tmp_path, batches):
+    """Every row ``sessionize_events`` (gap 30 min) emits over ``batches``,
+    one micro-batch per file, in one ``availableNow`` query."""
+    src = str(tmp_path / "sess_src")
+    for batch in batches:
+        _write_events(spark, src, batch)
+    stream = (
+        spark.readStream.schema(_EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    out = sessionize_events(stream, key_col="user_id", ts_col="ts", gap_minutes=30)
+    rows: list = []
+    q = (
+        out.writeStream.outputMode("update")
+        .foreachBatch(lambda b, _i: rows.extend(b.collect()))
+        .option("checkpointLocation", str(tmp_path / "sess_ck"))
+        .trigger(availableNow=True).start()
+    )
+    _drain(q)
+    return rows
+
+
+def test_sessionize_events_closes_session_on_event_time(spark, tmp_path):
+    """A session is emitted closed once an event of ANY key more than the
+    gap later moves the watermark past its last event + gap; a session
+    the watermark has not passed stays open."""
+    rows = _sessionize_run(spark, tmp_path, [
+        [(9, 0, 1, 1.0), (9, 1, 1, 1.0), (9, 0, 2, 1.0)],
+        [(10, 5, 3, 1.0)],  # watermark -> 9:35, past 9:31 (user 1) and 9:30
+    ])
+    closed = {r["user_id"]: r for r in rows if r["closed"]}
+    assert set(closed) == {1, 2}
+    assert closed[1]["n_events"] == 2
+    assert closed[1]["first_ts"] == dt.datetime(2026, 1, 1, 9, 0)
+    assert closed[1]["last_ts"] == dt.datetime(2026, 1, 1, 9, 1)
+    assert closed[2]["n_events"] == 1
+    assert [r["n_events"] for r in rows if r["user_id"] == 3] == [1]
+
+
+def test_sessionize_events_drops_late_events(spark, tmp_path):
+    """A row behind the watermark is dropped: it neither opens a session
+    nor joins one.  Spark filters late rows against the watermark the
+    previous micro-batch ran with, so the late row comes two batches after
+    the row that set it."""
+    rows = _sessionize_run(spark, tmp_path, [
+        [(10, 0, 1, 1.0)],                   # watermark -> 9:30
+        [(10, 1, 1, 1.0)],
+        [(9, 0, 2, 1.0), (10, 2, 1, 1.0)],   # 9:00 is behind it
+    ])
+    assert {r["user_id"] for r in rows} == {1}
+    assert max(r["n_events"] for r in rows) == 3
+
+
+def test_sessionize_events_key_behind_current_watermark(spark, tmp_path):
+    """An event that passes the late-row filter (the previous batch's
+    watermark) can still leave its session's gap end behind the current
+    watermark; the session is kept and closed at the next watermark move
+    instead of failing the query on a timeout set in the past."""
+    rows = _sessionize_run(spark, tmp_path, [
+        [(9, 0, 1, 1.0)],                    # watermark -> 8:30
+        [(11, 0, 2, 1.0)],                   # watermark -> 10:30
+        [(9, 20, 1, 1.0)],                   # not late; 9:20 + gap < 10:30
+        [(11, 30, 3, 1.0)],                  # watermark -> 11:00
+    ])
+    closed = {r["user_id"]: r for r in rows if r["closed"]}
+    assert closed[1]["n_events"] == 2
+    assert closed[1]["last_ts"] == dt.datetime(2026, 1, 1, 9, 20)
 
 
 def test_dedup_stream_suppresses_redelivered_keys(spark, tmp_path):
@@ -203,7 +282,7 @@ def test_dedup_stream_suppresses_redelivered_keys(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     rows = spark.table("dedup_stream_t").collect()
     ids = sorted(r["user_id"] for r in rows)
     assert ids == [1, 2, 3, 4]  # each key exactly once despite redelivery
@@ -230,7 +309,7 @@ def test_incremental_rollup_exactly_once_on_retry(spark, tmp_path):
     q = incremental_rollup(
         stream, out, str(tmp_path / "ck"), key_cols=["user_id"], value_col="v"
     )
-    q.awaitTermination(120)
+    _drain(q)
 
     def totals():
         return {
@@ -279,7 +358,7 @@ def test_interval_join_streams_matches_batch_join(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True).start()
     )
-    q.awaitTermination(120)
+    _drain(q)
     got = sorted((r["user_id"], r["v_l"], r["v_r"]) for r in out)
     # static truth: user 1 10:00 -> 10:20 only; user 1 11:00 -> none in
     # (11:00, 11:30]; 9:50 right row is BEFORE every left row; user 2
@@ -329,7 +408,7 @@ def test_stream_to_table_exactly_once(spark, tmp_path):
         spark.read.parquet(src).schema
     ).parquet(src)
     q = stream_to_table(stream, root, str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
+    _drain(q)
     n_src = spark.read.parquet(src).count()  # generator plants extra rows
     t = Table(root)
     assert t.scan(spark).count() == n_src
@@ -365,7 +444,7 @@ def test_stream_to_table_upsert_exactly_once(spark, tmp_path):
     q = stream_to_table(
         stream, root, str(tmp_path / "ckpt"), mode="upsert", key_cols=["k"]
     )
-    q.awaitTermination(120)
+    _drain(q)
     t = Table(root)
     assert t.scan(spark).count() == 500
     files_before = {e["path"] for e in t.entries()}
@@ -378,7 +457,7 @@ def test_stream_to_table_upsert_exactly_once(spark, tmp_path):
     q = stream_to_table(
         stream, root, str(tmp_path / "ckpt"), mode="upsert", key_cols=["k"]
     )
-    q.awaitTermination(120)
+    _drain(q)
     df = t.scan(spark)
     assert df.count() == 550
     assert df.where(F.col("val") == "v1").count() == 150  # last writer won
